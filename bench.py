@@ -225,14 +225,14 @@ def main() -> None:
         import shutil  # noqa: PLC0415
         import tempfile  # noqa: PLC0415
 
+        from multi_report_etl_pipeline_spark import artifacts  # noqa: PLC0415
         from multi_report_etl_pipeline_spark.operators import (  # noqa: PLC0415
             rollup,
         )
 
         base = os.path.join(tempfile.gettempdir(), "graft_rollup_bench")
         shutil.rmtree(base, ignore_errors=True)
-        for k in [k for k in rollup._ROLLUP_CACHE if k[1] == base]:
-            del rollup._ROLLUP_CACHE[k]
+        artifacts.clear(("hourly_rollup", base))
         _force(rollup.hourly_rollup(spark, sf_dir, base_dir=base))
 
     timings["events_hourly_rollup_build"] = _timed(_run_rollup_build)

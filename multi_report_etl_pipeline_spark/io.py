@@ -30,40 +30,13 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Lazy-scan memo, stored ON the owning SparkSession object
-# (spark._graft_read_cache: {table path -> (source fingerprint,
-# DataFrame)}). This caches the PLAN (an unresolved parquet scan +
-# optional ns->us projection), never results — every action still
-# scans the files. What it saves is the driver-side footer read +
-# file-listing JVM work `spark.read.parquet` repeats on every call
-# (~0.1-0.15 s per call; a q9 construction issues seven) — the
-# path-based analog of the listing cache Spark only keeps for CATALOG
-# tables (guide §6). The (mtime, size) fingerprint stored in the
-# VALUE invalidates on fixture rewrite — a rewrite REPLACES the entry
-# (at most one per table per session) rather than minting a new key
-# beside the stale one (ADVICE r10: superseded entries pinned their
-# DataFrame forever). Hanging the dict off the session replaces the
-# round-10 global keyed on id(spark), whose id could in principle be
-# reused by a later session after garbage collection (VERDICT r10
-# item 9): attribute lookup is identity-based by construction, and
-# the cache's lifetime is exactly its session's — a collected session
-# takes its plans with it.
-
-
-def _session_read_cache(spark: SparkSession) -> dict:
-    cache = getattr(spark, "_graft_read_cache", None)
-    if cache is None:
-        cache = {}
-        spark._graft_read_cache = cache
-    return cache
-
-
 def table_fingerprint(path: str) -> object:
-    """Cheap (name, mtime_ns, size) fingerprint of a parquet file or
-    part-file directory — the repo-wide construct-cache invalidation
-    convention (queries/llm_ops._snapshot_key delegates here). A
-    missing path fingerprints as None; the read itself fails loudly
-    downstream."""
+    """Cheap fingerprint of a parquet file or part-file directory: the
+    invalidation key of every derived artifact (artifacts.Store). A
+    file fingerprints as (mtime_ns, size); a directory as one
+    (name, mtime_ns, size) per entry, so an in-place rewrite of any part
+    file changes it. A missing path fingerprints as None; the read
+    itself fails loudly downstream."""
     try:
         if os.path.isdir(path):
             return tuple(
@@ -85,22 +58,29 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microsecond timestamp here — integer ns-div-1000 truncation,
     bit-identical to DuckDB's ns->us cast. The conf is set at runtime so
     the read works in ANY session (the verification driver builds its own
-    SparkSession without our session.get_spark defaults)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    fp = table_fingerprint(path)
-    cache = _session_read_cache(spark)
-    entry = cache.get(path)
-    if entry is not None and entry[0] == fp:
-        return entry[1]
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
+    SparkSession without our session.get_spark defaults).
 
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    cache[path] = (fp, df)
-    return df
+    The scan PLAN (never its results) is memoized in the session's
+    artifact store under the table's fingerprint: it saves the
+    driver-side footer read and file listing ``spark.read.parquet``
+    repeats on every call (~0.1-0.15 s; a q9 construction issues seven),
+    and an in-place rewrite replaces the entry."""
+    from multi_report_etl_pipeline_spark.artifacts import (  # noqa: PLC0415
+        session_store,
+    )
+
+    def scan():
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            from pyspark.sql import functions as F
+
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        return df
+
+    return session_store(spark).get(name, sf_dir, (name,), scan)
 
 
 def fan_out(

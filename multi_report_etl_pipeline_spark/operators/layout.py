@@ -179,20 +179,6 @@ def compact_parquet(
 # ------------------------------------------------ bucketed fact layout ---
 
 
-def table_fingerprint(sf_dir: str, table: str) -> object:
-    """Cheap (name, mtime_ns, size) fingerprint of a table's parquet
-    footprint — the shared construct-cache invalidation convention,
-    ONE implementation in io.table_fingerprint (ADVICE r10: three
-    hand-copies of this logic could silently drift)."""
-    import os  # noqa: PLC0415
-
-    from multi_report_etl_pipeline_spark.io import (  # noqa: PLC0415
-        table_fingerprint as _path_fp,
-    )
-
-    return _path_fp(os.path.join(sf_dir, table + ".parquet"))
-
-
 # (table_name, base_dir) pairs whose catalog registration has been
 # location-verified this process — makes the DESC FORMATTED check a
 # one-time cost instead of a per-query-construction one
@@ -239,7 +225,10 @@ def bucket_facts(
     import tempfile  # noqa: PLC0415
     import time  # noqa: PLC0415
 
-    from multi_report_etl_pipeline_spark.io import read_table  # noqa: PLC0415
+    from multi_report_etl_pipeline_spark.io import (  # noqa: PLC0415
+        read_table,
+        table_fingerprint,
+    )
 
     specs = specs or {"lineitem": "l_orderkey", "orders": "o_orderkey"}
     # report SORTED BY from these scans: Spark gates bucketed-scan
@@ -265,7 +254,7 @@ def bucket_facts(
     names: dict[str, str] = {}
     for table, key in specs.items():
         cols = [key] if isinstance(key, str) else list(key)
-        fp = table_fingerprint(sf_dir, table)
+        fp = table_fingerprint(os.path.join(sf_dir, table + ".parquet"))
         h = hashlib.md5(
             repr((sf_dir, table, tuple(cols), n_buckets, fp)).encode()
         ).hexdigest()[:10]

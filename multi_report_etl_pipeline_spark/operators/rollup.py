@@ -22,8 +22,8 @@ count + round-6 avg the inline plans emit), so the rollup-served query
 rows sit under the same DuckDB oracles as their inline twins.
 
 Build cost is not hidden: it is measured and recorded in BASELINE.md
-(round 10), and the artifact is invalidated by the same
-(mtime, size)-fingerprint convention as every other construct cache.
+(round 10), and the artifact is invalidated by the events table's
+fingerprint, like every other entry of the artifact store.
 """
 
 from __future__ import annotations
@@ -34,10 +34,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multi_report_etl_pipeline_spark.operators.layout import table_fingerprint
-
-# artifact paths verified/built this process: (sf_dir, base_dir) -> path
-_ROLLUP_CACHE: dict[tuple, str] = {}
+from multi_report_etl_pipeline_spark import artifacts
+from multi_report_etl_pipeline_spark.io import read_table, table_fingerprint
 
 
 def hourly_rollup(
@@ -55,22 +53,26 @@ def hourly_rollup(
     - ``av``: ROUND(AVG(value), 6) — stored FINAL so every consumer
       reads the identical double the inline aggregate would emit
     """
-    import hashlib  # noqa: PLC0415
-
-    from multi_report_etl_pipeline_spark.io import read_table  # noqa: PLC0415
-
     base_dir = base_dir or os.path.join(
         tempfile.gettempdir(), "graft_hourly_rollup"
     )
-    # fingerprint participates in the cache key (and the path), so a
-    # fixture rewrite mid-process invalidates naturally; superseded
-    # artifacts are |types| x |hours| parquet files — bounded debris,
-    # no eager cleanup needed (unlike the GB-scale bucketed layouts)
-    fp = table_fingerprint(sf_dir, "events")
-    key = (sf_dir, base_dir, fp)
-    if key in _ROLLUP_CACHE:
-        return spark.read.parquet(_ROLLUP_CACHE[key])
+    # the fingerprint names the path, so the artifact is reused across
+    # processes; superseded ones are |types| x |hours| parquet files —
+    # bounded debris, unlike the GB-scale bucketed layouts
+    path = artifacts.get(
+        ("hourly_rollup", base_dir),
+        sf_dir,
+        ("events",),
+        lambda: _build_rollup(spark, sf_dir, base_dir),
+    )
+    return spark.read.parquet(path)
+
+
+def _build_rollup(spark: SparkSession, sf_dir: str, base_dir: str) -> str:
+    import hashlib  # noqa: PLC0415
+
     os.makedirs(base_dir, exist_ok=True)
+    fp = table_fingerprint(os.path.join(sf_dir, "events.parquet"))
     h = hashlib.md5(repr((sf_dir, "events", fp)).encode()).hexdigest()[:10]
     path = os.path.join(base_dir, f"graft_rollup_events_hourly_{h}")
     marker = os.path.join(path, "_GRAFT_COMPLETE")
@@ -94,5 +96,4 @@ def hourly_rollup(
         )
         with open(marker, "w") as f:
             f.write(repr((sf_dir, fp)))
-    _ROLLUP_CACHE[key] = path
-    return spark.read.parquet(path)
+    return path

@@ -763,18 +763,6 @@ def train_pq_codebooks_portable(
     ]
 
 
-def _dot_cols(a, b):
-    """Sequential index-order dot product over two array<double>
-    Columns — the Column-argument form of the ``DOT`` template, same
-    fold order as DuckDB's ``list_dot_product`` (proven bit-stable by
-    the cosine/IVF/PCA oracle rows)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _ldp_fold(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
     """Sequential index-order dot product over two (R, d) float64
     matrices, vectorized across rows: ``acc = ((0.0 + a0*b0) + a1*b1)

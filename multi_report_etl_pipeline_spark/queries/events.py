@@ -747,29 +747,22 @@ QUERIES.update(
 def streaming_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of docs_unigram_logprob: documents arrive as a
     file stream and are scored under the FROZEN LM artifact the batch
-    query fit (shared via llm_ops' construction cache) — offline fit,
+    query fit (the same artifact-store entry) — offline fit,
     online scoring, the deployment shape of perplexity filtering. The
     per-doc score aggregation is maintained incrementally and drained
     with availableNow; hash-checked against the SAME oracle as the
     batch query, so stream-vs-batch parity is driver-enforced."""
     from multi_report_etl_pipeline_spark import streaming  # noqa: PLC0415
-    from multi_report_etl_pipeline_spark.io import fan_out, read_table  # noqa: PLC0415
-    from multi_report_etl_pipeline_spark.operators import text  # noqa: PLC0415
+    from multi_report_etl_pipeline_spark.io import fan_out  # noqa: PLC0415
     from multi_report_etl_pipeline_spark.queries import llm_ops  # noqa: PLC0415
 
-    key = ("unigram_lm", sf_dir)
-    if key not in llm_ops._CONSTRUCT_CACHE:  # noqa: SLF001 - shared artifact cache
-        batch_docs = fan_out(
-            read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",)
-        )
-        llm_ops._CONSTRUCT_CACHE[key] = text.unigram_lm_stats(  # noqa: SLF001
-            batch_docs, vocab_size=llm_ops._LM_VOCAB  # noqa: SLF001
-        )
+    lm = llm_ops.unigram_lm(
+        fan_out(read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",)),
+        sf_dir,
+    )
     docs = streaming.read_documents_stream(spark, sf_dir)
     streaming.run_available_now(
-        streaming.doc_perplexity_stream(
-            docs, llm_ops._CONSTRUCT_CACHE[key]  # noqa: SLF001
-        ),
+        streaming.doc_perplexity_stream(docs, lm),
         "q_stream_perplexity",
         "complete",
     )
@@ -793,30 +786,29 @@ QUERIES.update(
 
 def streaming_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of docs_quality_logreg's scoring half: the linear
-    quality head is fit OFFLINE on the batch snapshot (weights cached as
-    the frozen model artifact, llm_ops._CONSTRUCT_CACHE) and each
+    quality head is fit OFFLINE on the batch snapshot (weights stored as
+    the frozen model artifact in the artifact store) and each
     arriving document micro-batch is scored by a stateless narrow map —
     no state store, no watermark, append mode. Hash-checked against the
     SAME unrolled-GD oracle as the batch query, so stream-vs-batch
     parity of the learned scores is driver-enforced."""
-    from multi_report_etl_pipeline_spark import streaming  # noqa: PLC0415
-    from multi_report_etl_pipeline_spark.io import read_table  # noqa: PLC0415
+    from multi_report_etl_pipeline_spark import artifacts, streaming  # noqa: PLC0415
     from multi_report_etl_pipeline_spark.operators import classifier  # noqa: PLC0415
     from multi_report_etl_pipeline_spark.queries import llm_ops  # noqa: PLC0415
 
-    key = ("logreg_weights", sf_dir)
-    if key not in llm_ops._CONSTRUCT_CACHE:  # noqa: SLF001 - shared artifact cache
-        feats = llm_ops.logreg_features(read_table(spark, sf_dir, "documents"))
-        llm_ops._CONSTRUCT_CACHE[key] = classifier.logistic_regression_fit(  # noqa: SLF001
-            feats,
+    weights = artifacts.get(
+        "logreg_weights",
+        sf_dir,
+        ("documents",),
+        lambda: classifier.logistic_regression_fit(
+            llm_ops.logreg_features(read_table(spark, sf_dir, "documents")),
             [name for name, _ in llm_ops._LOGREG_FEATS],  # noqa: SLF001
             iters=llm_ops._LOGREG_ITERS,  # noqa: SLF001
-        )
+        ),
+    )
     docs = streaming.read_documents_stream(spark, sf_dir)
     streaming.run_available_now(
-        streaming.quality_score_stream(
-            docs, llm_ops._CONSTRUCT_CACHE[key]  # noqa: SLF001
-        ),
+        streaming.quality_score_stream(docs, weights),
         "q_stream_quality_logreg",
         "append",
     )
@@ -1019,31 +1011,29 @@ QUERIES.update(
 )
 
 
-# data-derived event_type dictionaries, keyed by fixture fingerprint
-# (the same identity+version posture as llm_ops' construct cache): one
-# bounded distinct-types scan per dataset version per process
-_TYPE_DICT_CACHE: dict[tuple, list] = {}
-
-
 def _event_type_dict(spark: SparkSession, sf_dir: str) -> list:
-    from multi_report_etl_pipeline_spark.operators.layout import (  # noqa: PLC0415
-        table_fingerprint,
-    )
+    """The data-derived event_type dictionary: one bounded
+    distinct-types scan per dataset version (an artifact-store entry)."""
+    from multi_report_etl_pipeline_spark import artifacts  # noqa: PLC0415
 
-    key = (sf_dir, table_fingerprint(sf_dir, "events"))
-    if key not in _TYPE_DICT_CACHE:
-        ev = read_table(spark, sf_dir, "events")
-        # NULL types are dropped from the dictionary, not sorted (None
-        # vs str raises): the narrow path's array_position returns NULL
-        # for an unlisted (NULL) type and element_at passes the NULL
-        # index back through as a NULL type — the same round-trip the
-        # string plan does natively (ADVICE round 9)
-        _TYPE_DICT_CACHE[key] = sorted(
+    # NULL types are dropped from the dictionary, not sorted (None vs
+    # str raises): the narrow path's array_position returns NULL for an
+    # unlisted (NULL) type and element_at passes the NULL index back
+    # through as a NULL type — the same round-trip the string plan does
+    # natively (ADVICE round 9)
+    return artifacts.get(
+        "event_type_dict",
+        sf_dir,
+        ("events",),
+        lambda: sorted(
             r[0]
-            for r in ev.select("event_type").distinct().collect()
+            for r in read_table(spark, sf_dir, "events")
+            .select("event_type")
+            .distinct()
+            .collect()
             if r[0] is not None
-        )
-    return _TYPE_DICT_CACHE[key]
+        ),
+    )
 
 
 def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1063,7 +1053,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 bytes instead of a ~10-char string; the strings come back via
     element_at over the literal dictionary AFTER the pair aggregation
     (|types|^2 rows). The dictionary is DERIVED FROM THE DATA (one
-    distinct-types scan, construct-cached per fixture fingerprint —
+    distinct-types scan, an artifact per fixture fingerprint —
     the Parquet-dictionary analog, |types| is bounded by the domain),
     not from the EVENT_TYPES constant: a constant dictionary maps
     unseen types to array_position 0 and element_at(_, 0) RAISES
@@ -1655,22 +1645,14 @@ def streaming_binned_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — <= nbins rows regardless of stream length — under FROZEN
     bin bounds (the offline-fit artifact pattern shared with the LM /
     logreg streaming twins: a histogram deployment fixes its binning
-    before the stream starts; here the bounds are the corpus min/max,
-    computed once per sf_dir and cached). The drained histogram feeds
+    before the stream starts; here the bounds are the batch query's
+    min/max artifact). The drained histogram feeds
     the SAME interpolation as the batch query under the SAME oracle, so
     streamed percentiles are value-checked against DuckDB."""
     from multi_report_etl_pipeline_spark import streaming
     from multi_report_etl_pipeline_spark.queries import llm_ops
 
-    key = ("stream_pctl_bounds", sf_dir)
-    if key not in llm_ops._CONSTRUCT_CACHE:  # noqa: SLF001
-        llm_ops._CONSTRUCT_CACHE[key] = (  # noqa: SLF001
-            read_table(spark, sf_dir, "events")
-            .agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
-            .collect()[0]
-        )
-    b = llm_ops._CONSTRUCT_CACHE[key]  # noqa: SLF001
-    mn, mx = float(b["mn"]), float(b["mx"])
+    mn, mx = llm_ops.events_value_bounds(spark, sf_dir) or (0.0, 1.0)
     nb = llm_ops._QBINS  # noqa: SLF001
     width = (mx - mn) / float(nb)
     st = streaming.read_events_stream(spark, sf_dir)

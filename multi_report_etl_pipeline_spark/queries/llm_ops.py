@@ -15,11 +15,10 @@ so the two sides cannot drift.
 
 from __future__ import annotations
 
-import atexit as _atexit
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multi_report_etl_pipeline_spark import artifacts
 from multi_report_etl_pipeline_spark.io import fan_out, read_table
 from multi_report_etl_pipeline_spark.operators import dedup, similarity, text
 from multi_report_etl_pipeline_spark.queries import QuerySpec
@@ -595,51 +594,9 @@ WHERE bit_count(xor(lo1, lo2)) + bit_count(xor(hi1, hi2)) <= 3
 # ---------------------------------------------------------- similarity ---
 
 
-# Construction artifacts that are pure functions of the sf_dir parquet
-# snapshot (the %100 query set; the seeded sample-trained IVF quantizer).
-# Rebuilding them per invocation put a driver-side collect/training job
-# inside every repeat call — ~3x the actual query cost in the bench's
-# min-of-N loop. One entry per (kind, sf_dir, fixture fingerprint), so
-# the cache is bounded by the number of dataset versions a process
-# touches; a process restart, a changed sf_dir path, or an in-place
-# fixture rewrite (the fingerprint catches this — ADVICE r7: keying on
-# sf_dir alone served a stale IVF index after a mid-process
-# regeneration) invalidates, matching how a deployed pipeline persists
-# its query set / ANN index artifact across runs.
-_CONSTRUCT_CACHE: dict[tuple, object] = {}
-
-
-def _snapshot_key(kind: str, sf_dir: str, table: str) -> tuple:
-    """Cache key carrying the fixture's identity AND version: the path
-    plus the shared (name, mtime_ns, size) fingerprint of the table's
-    parquet footprint (ONE implementation, io.table_fingerprint —
-    ADVICE r10: the hand-copied variants could silently drift).
-    Directory layouts fingerprint every part-file, so an in-place
-    rewrite invalidates; a missing path fingerprints as None (the read
-    itself fails loudly downstream)."""
-    import os  # noqa: PLC0415
-
-    from multi_report_etl_pipeline_spark.io import (  # noqa: PLC0415
-        table_fingerprint,
-    )
-
-    return (kind, sf_dir, table_fingerprint(os.path.join(sf_dir, table + ".parquet")))
-
-
-# Temp dirs holding built IVF index layouts: removed at interpreter
-# exit (ADVICE r7 — mkdtemp results were never cleaned up), and a
-# fingerprint change drops the superseded dir eagerly at rebuild.
-_IVF_INDEX_DIRS: list[str] = []
-
-
-def _cleanup_ivf_dirs() -> None:
-    import shutil  # noqa: PLC0415
-
-    while _IVF_INDEX_DIRS:
-        shutil.rmtree(_IVF_INDEX_DIRS.pop(), ignore_errors=True)
-
-
-_atexit.register(_cleanup_ivf_dirs)
+# Query sets, quantizers and corpus statistics are artifact-store
+# entries: built once per snapshot, not per call. perfbench counts them.
+_CONSTRUCT_CACHE = artifacts.STORE
 
 
 # Hard bound on the brute-force query set: the query side is collected
@@ -653,20 +610,28 @@ _atexit.register(_cleanup_ivf_dirs)
 _TOPK_MAX_Q = 500
 
 
+def _topk_queries(emb: DataFrame) -> DataFrame:
+    return emb.filter(F.col("vec_id") % 100 == 0).orderBy("vec_id").limit(_TOPK_MAX_Q)
+
+
+def _topk_query_rows(queries: DataFrame, sf_dir: str) -> list:
+    """The collected (q_id, q_vec) query set: one artifact shared by the
+    brute-force and PQ searches."""
+    return artifacts.get(
+        "topk_queries",
+        sf_dir,
+        ("embeddings",),
+        lambda: queries.select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+        ).collect(),
+    )
+
+
 def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(read_table(spark, sf_dir, "embeddings"), spark, cols=("vec_id",))
-    queries = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(_TOPK_MAX_Q)
-    )
-    key = _snapshot_key("cosine_topk_queries", sf_dir, "embeddings")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = queries.select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        ).collect()
+    queries = _topk_queries(emb)
     return similarity.brute_topk(
-        emb, queries, k=10, q_rows=_CONSTRUCT_CACHE[key], max_q=_TOPK_MAX_Q
+        emb, queries, k=10, q_rows=_topk_query_rows(queries, sf_dir), max_q=_TOPK_MAX_Q
     )
 
 
@@ -2288,18 +2253,20 @@ def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction is high; clustered real-world embeddings get the same
     recall at a far smaller cut."""
     emb = fan_out(read_table(spark, sf_dir, "embeddings"), spark, cols=("vec_id",))
-    queries = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(_TOPK_MAX_Q)
-    )
-    key = _snapshot_key("ivf_centroids", sf_dir, "embeddings")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = similarity.train_centroids_portable(
-            emb, n_cells=_IVF_CELLS, iters=_IVF_ITERS, train_sample=_IVF_SAMPLE
-        )
+    queries = _topk_queries(emb)
     return similarity.ivf_topk(
-        emb, queries, k=10, n_probe=_IVF_PROBE, centroids=_CONSTRUCT_CACHE[key]
+        emb, queries, k=10, n_probe=_IVF_PROBE, centroids=_ivf_centroids(emb, sf_dir)
+    )
+
+
+def _ivf_centroids(emb: DataFrame, sf_dir: str) -> list:
+    return artifacts.get(
+        "ivf_centroids",
+        sf_dir,
+        ("embeddings",),
+        lambda: similarity.train_centroids_portable(
+            emb, n_cells=_IVF_CELLS, iters=_IVF_ITERS, train_sample=_IVF_SAMPLE
+        ),
     )
 
 
@@ -2314,57 +2281,26 @@ def emb_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune, and exact rescore as emb_ivf_topk, so the SAME unrolled
     DuckDB oracle value-checks this path; row-identity with ivf_topk
     and the PartitionFilters pruning are additionally pinned in
-    tests/. The index builds once per (process, fixture fingerprint)
-    into a temp dir — the build cost is the deployment's one-time
-    indexing job, amortized across every query batch served from it;
-    a regenerated fixture changes the fingerprint and forces a rebuild
-    (the superseded dir is removed), and every index dir is cleaned at
-    interpreter exit (ADVICE r7). The local temp path serves only this
-    single-JVM harness — a cluster deployment passes a shared
+    tests/. The index builds once per fixture fingerprint into an
+    owned scratch dir of the artifact store — the build cost is the
+    deployment's one-time indexing job, amortized across every query
+    batch served from it; a regenerated fixture forces a rebuild and
+    the superseded dir is deleted. The local scratch path serves only
+    this single-JVM harness — a cluster deployment passes a shared
     filesystem path to build_ivf_index directly."""
-    import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     emb = fan_out(read_table(spark, sf_dir, "embeddings"), spark, cols=("vec_id",))
-    queries = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(_TOPK_MAX_Q)
-    )
-    ckey = _snapshot_key("ivf_centroids", sf_dir, "embeddings")
-    if ckey not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[ckey] = similarity.train_centroids_portable(
-            emb, n_cells=_IVF_CELLS, iters=_IVF_ITERS, train_sample=_IVF_SAMPLE
-        )
-    ikey = _snapshot_key("ivf_index_path", sf_dir, "embeddings")
-    if ikey not in _CONSTRUCT_CACHE:
-        # A fingerprint change (fixture regenerated in place) rebuilds:
-        # drop any superseded index for the same sf_dir so temp space
-        # stays bounded at one live index per dataset; all dirs are
-        # also atexit-cleaned (ADVICE r7).
-        stale = [
-            k
-            for k in _CONSTRUCT_CACHE
-            if k[0] == "ivf_index_path" and k[1] == sf_dir
-        ]
-        if stale:
-            import shutil  # noqa: PLC0415
+    queries = _topk_queries(emb)
+    centroids = _ivf_centroids(emb, sf_dir)
 
-            for k in stale:
-                d = os.path.dirname(str(_CONSTRUCT_CACHE.pop(k)))
-                shutil.rmtree(d, ignore_errors=True)
-                if d in _IVF_INDEX_DIRS:
-                    _IVF_INDEX_DIRS.remove(d)
-        tmpdir = tempfile.mkdtemp(prefix="ivf_index_")
-        _IVF_INDEX_DIRS.append(tmpdir)
-        path = tmpdir + "/index"
-        similarity.build_ivf_index(
-            emb, path, n_cells=_IVF_CELLS, centroids=_CONSTRUCT_CACHE[ckey]
-        )
-        _CONSTRUCT_CACHE[ikey] = path
-    return similarity.ivf_topk_indexed(
-        spark, _CONSTRUCT_CACHE[ikey], queries, k=10, n_probe=_IVF_PROBE
+    def build(owned: str) -> str:
+        path = owned + "/index"
+        similarity.build_ivf_index(emb, path, n_cells=_IVF_CELLS, centroids=centroids)
+        return path
+
+    path = artifacts.get(
+        "ivf_index_path", sf_dir, ("embeddings",), build, scratch="ivf_index_"
     )
+    return similarity.ivf_topk_indexed(spark, path, queries, k=10, n_probe=_IVF_PROBE)
 
 
 def _ivf_sql(
@@ -2482,36 +2418,26 @@ def emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py. Query set bounded by the same LIMIT-by-
     construction broadcast contract as emb_cosine_topk."""
     emb = fan_out(read_table(spark, sf_dir, "embeddings"), spark, cols=("vec_id",))
-    queries = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(_TOPK_MAX_Q)
-    )
-    key = _snapshot_key("pq_codebooks", sf_dir, "embeddings")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = similarity.train_pq_codebooks_portable(
+    queries = _topk_queries(emb)
+    codebooks = artifacts.get(
+        "pq_codebooks",
+        sf_dir,
+        ("embeddings",),
+        lambda: similarity.train_pq_codebooks_portable(
             emb,
             m_sub=_PQ_SUBS,
             n_codes=_PQ_CODES,
             iters=_PQ_ITERS,
             train_sample=_PQ_SAMPLE,
-        )
-    # query rows under the same snapshot-keyed construct cache as
-    # emb_cosine_topk/emb_ivf_topk — the bounded (<= max_q) broadcast
-    # artifact, collected once per fixture fingerprint instead of one
-    # collect job per construction (round 10)
-    qkey = _snapshot_key("pq_topk_queries", sf_dir, "embeddings")
-    if qkey not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[qkey] = queries.select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        ).limit(_TOPK_MAX_Q + 1).collect()
+        ),
+    )
     return similarity.pq_topk(
         emb,
         queries,
         k=10,
-        codebooks=_CONSTRUCT_CACHE[key],
+        codebooks=codebooks,
         n_cand=_PQ_CAND,
-        q_rows=_CONSTRUCT_CACHE[qkey],
+        q_rows=_topk_query_rows(queries, sf_dir),
         max_q=_TOPK_MAX_Q,
     )
 
@@ -2843,11 +2769,17 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted index-stats artifact, like the IVF quantizer) + one
     narrow scoring scan."""
     docs = fan_out(read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",))
-    key = _snapshot_key("bm25_stats", sf_dir, "documents")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = text.bm25_corpus_stats(docs, list(_BM25_TERMS))
     return text.bm25_topk(
-        docs, list(_BM25_TERMS), k=20, stats=_CONSTRUCT_CACHE[key]
+        docs, list(_BM25_TERMS), k=20, stats=_bm25_stats(docs, sf_dir)
+    )
+
+
+def _bm25_stats(docs: DataFrame, sf_dir: str):
+    return artifacts.get(
+        "bm25_stats",
+        sf_dir,
+        ("documents",),
+        lambda: text.bm25_corpus_stats(docs, list(_BM25_TERMS)),
     )
 
 
@@ -3021,11 +2953,19 @@ def docs_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg — the corpus never shuffles, only one slim row per doc.
     Micro-nat integer log-probs make the sums exact across engines."""
     docs = fan_out(read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",))
-    key = _snapshot_key("unigram_lm", sf_dir, "documents")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = text.unigram_lm_stats(docs, vocab_size=_LM_VOCAB)
     return text.unigram_logprob(
-        docs, stats=_CONSTRUCT_CACHE[key], buckets=_LM_BUCKETS
+        docs, stats=unigram_lm(docs, sf_dir), buckets=_LM_BUCKETS
+    )
+
+
+def unigram_lm(docs: DataFrame, sf_dir: str):
+    """The corpus LM artifact fit on ``docs`` (the documents table of
+    ``sf_dir``), shared with the streaming scoring twin."""
+    return artifacts.get(
+        "unigram_lm",
+        sf_dir,
+        ("documents",),
+        lambda: text.unigram_lm_stats(docs, vocab_size=_LM_VOCAB),
     )
 
 
@@ -3084,12 +3024,15 @@ def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from multi_report_etl_pipeline_spark.operators import sampling  # noqa: PLC0415
 
     docs = fan_out(read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",))
-    key = _snapshot_key("dsir_stats", sf_dir, "documents")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = sampling.dsir_bucket_stats(
+    stats = artifacts.get(
+        "dsir_stats",
+        sf_dir,
+        ("documents",),
+        lambda: sampling.dsir_bucket_stats(
             docs, F.col("source").isin(*_DSIR_TARGET), n_buckets=_DSIR_BUCKETS
-        )
-    return sampling.dsir_sample(docs, k=_DSIR_K, stats=_CONSTRUCT_CACHE[key])
+        ),
+    )
+    return sampling.dsir_sample(docs, k=_DSIR_K, stats=stats)
 
 
 def _dsir_sql(n_buckets: int = _DSIR_BUCKETS, k: int = _DSIR_K) -> str:
@@ -3148,16 +3091,16 @@ def emb_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .limit(_TOPK_MAX_Q)
     )
-    key = _snapshot_key("int8_topk_queries", sf_dir, "embeddings")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = (
-            queries.select(
-                F.col("vec_id").alias("q_id"),
-                similarity.int8_quantize("embedding").alias("q_q8"),
-            )
-            .collect()
-        )
-    return similarity.int8_topk(emb, queries, k=10, q_rows=_CONSTRUCT_CACHE[key])
+    q_rows = artifacts.get(
+        "int8_topk_queries",
+        sf_dir,
+        ("embeddings",),
+        lambda: queries.select(
+            F.col("vec_id").alias("q_id"),
+            similarity.int8_quantize("embedding").alias("q_q8"),
+        ).collect(),
+    )
+    return similarity.int8_topk(emb, queries, k=10, q_rows=q_rows)
 
 
 INT8_TOPK_SQL = f"""
@@ -3282,17 +3225,18 @@ def docs_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     array fold — no join/explode/shuffle). The oracle replays training
     via the unrolled CTEs, then applies the same nested replaces."""
     docs = fan_out(read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",))
-    key = _snapshot_key("bpe_merges", sf_dir, "documents")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = [
+    merges = artifacts.get(
+        "bpe_merges",
+        sf_dir,
+        ("documents",),
+        lambda: [
             (r["left_sym"], r["right_sym"])
             for r in text.bpe_train_merges(
                 docs, n_merges=_BPE_MERGES, passes=_BPE_PASSES
             ).collect()
-        ]
-    return text.bpe_apply_counts(
-        docs, _CONSTRUCT_CACHE[key], passes=_BPE_PASSES
+        ],
     )
+    return text.bpe_apply_counts(docs, merges, passes=_BPE_PASSES)
 
 
 def _bpe_tokenize_sql(
@@ -3814,6 +3758,22 @@ _QUANTS = (0.5, 0.9, 0.99)
 _QLABELS = {0.5: "p50", 0.9: "p90", 0.99: "p99"}
 
 
+def events_value_bounds(spark: SparkSession, sf_dir: str) -> tuple | None:
+    """(min, max) of events.value: the frozen bin bounds shared by the
+    binned-percentile query and its streaming twin. None for an empty
+    table (not stored: the table may be populated later)."""
+
+    def bounds():
+        row = (
+            read_table(spark, sf_dir, "events")
+            .agg(F.min("value").alias("mn"), F.max("value").alias("mx"))
+            .collect()[0]
+        )
+        return None if row["mn"] is None else (float(row["mn"]), float(row["mx"]))
+
+    return artifacts.get("events_value_bounds", sf_dir, ("events",), bounds)
+
+
 def events_binned_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable quantile sketch: a fixed-width histogram (the
     mergeable quantile summary — per-bin counts partial-agg and merge
@@ -3828,7 +3788,7 @@ def events_binned_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round 9, VERDICT r8 item 7) — computed once per fixture
     fingerprint as a 1-row aggregate and embedded as plan literals (the
     same frozen-bin-bounds pattern the streaming twin uses, and the
-    same construct-cache posture as the IVF centroids: a dataset
+    same artifact-store posture as the IVF centroids: a dataset
     statistic persists with the dataset, it isn't re-derived per
     query). That folds the old bounds-scan + histogram-scan double pass
     (two full reads of the same column — the no-exchange-reuse trap)
@@ -3842,21 +3802,12 @@ def events_binned_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window  # noqa: PLC0415
 
     ev = read_table(spark, sf_dir, "events").select("value")
-    key = _snapshot_key("events_value_bounds", sf_dir, "events")
-    empty_input = False
-    if key not in _CONSTRUCT_CACHE:
-        row = ev.agg(
-            F.min("value").alias("mn"), F.max("value").alias("mx")
-        ).collect()[0]
-        if row["mn"] is None:
-            # empty events table: min/max are NULL — don't cache (the
-            # table may be populated later), build the plan with dummy
-            # bounds and return it row-free so the degradation matches
-            # the old in-plan-broadcast-bounds form (ADVICE round 9)
-            empty_input = True
-        else:
-            _CONSTRUCT_CACHE[key] = (float(row["mn"]), float(row["mx"]))
-    mn_v, mx_v = _CONSTRUCT_CACHE.get(key, (0.0, 1.0))
+    bounds = events_value_bounds(spark, sf_dir)
+    # empty events table: build the plan with dummy bounds and return it
+    # row-free so the degradation matches the old in-plan-broadcast-bounds
+    # form (ADVICE round 9)
+    empty_input = bounds is None
+    mn_v, mx_v = bounds or (0.0, 1.0)
     nb = _QBINS
     width = (F.lit(mx_v) - F.lit(mn_v)) / F.lit(float(nb))
     binned = ev.select(
@@ -4365,11 +4316,8 @@ def docs_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window  # noqa: PLC0415
 
     docs = fan_out(read_table(spark, sf_dir, "documents"), spark, cols=("doc_id",))
-    key = _snapshot_key("bm25_stats", sf_dir, "documents")
-    if key not in _CONSTRUCT_CACHE:
-        _CONSTRUCT_CACHE[key] = text.bm25_corpus_stats(docs, list(_BM25_TERMS))
     lex = text.bm25_topk(
-        docs, list(_BM25_TERMS), k=_RRF_CAND, stats=_CONSTRUCT_CACHE[key]
+        docs, list(_BM25_TERMS), k=_RRF_CAND, stats=_bm25_stats(docs, sf_dir)
     )
     sem = (
         _hash_embed_scored(docs)
@@ -4777,7 +4725,7 @@ def _hourly_exact_uniques(spark: SparkSession, sf_dir: str, ev) -> DataFrame:
     """(hour_t, exact_uniques): exact windowed distinct users.
 
     Default plan (round 10): bitmap-index distinct. Hours map to a
-    dense index from the dataset's min hour (one construct-cached
+    dense index from the dataset's min hour (one stored
     1-row min, the binned-percentiles posture); each (user, 64-hour
     segment) group bit_ors its hour bits into one long, then 64
     mask-and-sum aggregates over the tiny (user x segment) frame read
@@ -4798,8 +4746,8 @@ def _hourly_exact_uniques(spark: SparkSession, sf_dir: str, ev) -> DataFrame:
     )
     if spark.conf.get("spark.sql.graft.uniquesBitmap", "on") == "off":
         return fallback
-    key = _snapshot_key("events_min_hour", sf_dir, "events")
-    if key not in _CONSTRUCT_CACHE:
+
+    def min_hour() -> int | None:
         row = ev.agg(
             F.min(tl).alias("m"),
             F.sum(
@@ -4809,9 +4757,12 @@ def _hourly_exact_uniques(spark: SparkSession, sf_dir: str, ev) -> DataFrame:
         if row["m"] is None or (row["nn"] or 0) > 0:
             # empty table, NULL ts (NULL hour group) or NULL users (a
             # countDistinct group can report 0): exact-parity fallback
-            return fallback
-        _CONSTRUCT_CACHE[key] = int(row["m"]) // 3600
-    mn = _CONSTRUCT_CACHE[key]
+            return None
+        return int(row["m"]) // 3600
+
+    mn = artifacts.get("events_min_hour", sf_dir, ("events",), min_hour)
+    if mn is None:
+        return fallback
     core = (
         ev.select("user_id", (tl.cast("long")).alias("tsl"))
         .select(

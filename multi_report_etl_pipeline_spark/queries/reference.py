@@ -14,15 +14,14 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multi_report_etl_pipeline_spark import domain, oracle, reports, staging
+from multi_report_etl_pipeline_spark import artifacts, domain, oracle, reports, staging
 from multi_report_etl_pipeline_spark.io import read_table
 from multi_report_etl_pipeline_spark.queries import QuerySpec
 
-# sf_dir -> parquet path of the materialized contact-survivor table.
-# Empty by default: the verification driver always gets the pure lazy
-# path. bench.py (or any caller running several staging consumers in one
-# session) opts in via materialize_staging().
-_MATERIALIZED: dict[str, str] = {}
+# The materialized contact survivors: an artifact-store entry, absent
+# (lazy staging) unless a caller opts in via materialize_staging().
+_SURVIVORS = "staging_survivors"
+_SURVIVOR_SOURCES = ("orders", "lineitem")
 
 
 def materialize_staging(
@@ -44,20 +43,16 @@ def materialize_staging(
     stg_accounts and stg_activities stay lazy: they are narrow maps over
     the raw scans and re-deriving them costs less than writing and
     reading them back. The materialization is a plain parquet path (no
-    catalog) so repeated runs and foreign sessions can't collide on
-    managed-table locations."""
+    catalog) in a scratch dir the artifact store owns: it is served
+    while the orders/lineitem fingerprint matches, and deleted on a
+    rewrite of either, by clear_materialized_staging or at exit."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from multi_report_etl_pipeline_spark.io import fan_out  # noqa: PLC0415
 
-    suffix = "".join(c if c.isalnum() else "_" for c in sf_dir).strip("_")
     n_splits = n_splits or spark.sparkContext.defaultParallelism
-    # tmpfs beats the (virtio) disk for the scratch table when present;
-    # on a cluster this path would be HDFS/S3 and is a config concern
-    tmp_base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     # project BOTH sides down before the exchange/broadcast explicitly:
     # Catalyst does not prune columns below a user repartition or a
     # forced broadcast hint, and shuffling the unused lineitem columns
@@ -75,19 +70,25 @@ def materialize_staging(
     sact = domain.stg_activities_df(
         lineitem, F.broadcast(orders), repartition_by_account=n_splits
     )
-    base = os.path.join(tmp_base, "multi_report_etl_pipeline_spark_staging", suffix)
-    survivors_path = os.path.join(base, "contact_survivors")
-    staging.combined_contact_survivors(sact).write.mode("overwrite").parquet(
-        survivors_path
+
+    def build(owned: str) -> str:
+        path = os.path.join(owned, "contact_survivors")
+        staging.combined_contact_survivors(sact).write.parquet(path)
+        return path
+
+    artifacts.get(
+        _SURVIVORS,
+        sf_dir,
+        _SURVIVOR_SOURCES,
+        build,
+        scratch="multi_report_etl_pipeline_spark_staging_",
     )
-    _MATERIALIZED[sf_dir] = survivors_path
 
 
 def clear_materialized_staging(sf_dir: str | None = None) -> None:
-    if sf_dir is None:
-        _MATERIALIZED.clear()
-    else:
-        _MATERIALIZED.pop(sf_dir, None)
+    """Stop routing build_staging to the materialization of ``sf_dir``
+    (every sf_dir when None) and delete its files."""
+    artifacts.clear(_SURVIVORS, sf_dir)
 
 
 def build_staging(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -95,18 +96,20 @@ def build_staging(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     Everything is lazy; calling this repeatedly only rebuilds logical
     plans (the reference's non-materialized-view model, README.md:116).
-    If materialize_staging() ran for this sf_dir, the staging tables come
-    from the bucketed materialization instead (the reference's
-    CREATE TABLE + CREATE INDEX model) and the window/join exchanges
-    above them disappear.
+    If materialize_staging() ran for this sf_dir and its sources are
+    unchanged since, the staging tables come from the materialization
+    instead (the reference's CREATE TABLE + CREATE INDEX model) and the
+    window/join exchanges above them disappear. A lookup never
+    materializes: its build is a no-op, which also drops a stale entry.
     """
     orders = read_table(spark, sf_dir, "orders")
     stg_accounts = domain.stg_accounts_df(orders)
     lineitem = read_table(spark, sf_dir, "lineitem")
     stg_activities = domain.stg_activities_df(lineitem, orders)
-    if sf_dir in _MATERIALIZED:
+    survivors = artifacts.get(_SURVIVORS, sf_dir, _SURVIVOR_SOURCES, lambda: None)
+    if survivors is not None:
         contact_views = staging.clean_views_from_survivors(
-            spark.read.parquet(_MATERIALIZED[sf_dir])
+            spark.read.parquet(survivors)
         )
     else:
         contact_views = {

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from multi_report_etl_pipeline_spark.queries.events import QUERIES
@@ -245,6 +247,9 @@ def test_hourly_rollup_serves_identical_values_and_reuses_artifact(
     change (different path)."""
     import os
 
+    import shutil
+
+    from multi_report_etl_pipeline_spark import artifacts
     from multi_report_etl_pipeline_spark.operators import rollup as rl
     from multi_report_etl_pipeline_spark.queries.events import (
         events_ewma_anomaly,
@@ -253,13 +258,15 @@ def test_hourly_rollup_serves_identical_values_and_reuses_artifact(
     from tests.conftest import SF_DIR
 
     base = str(tmp_path / "ru")
-    rl._ROLLUP_CACHE.clear()
+    kind = ("hourly_rollup", base)
     df = rl.hourly_rollup(spark, SF_DIR, base_dir=base)
     [path] = [os.path.join(base, d) for d in os.listdir(base)]
     mtimes = {
         f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
     }
-    rl._ROLLUP_CACHE.clear()  # simulate a new process
+    assert (kind, SF_DIR) in artifacts.STORE.keys()
+    artifacts.clear(kind)  # simulate a new process
+    assert (kind, SF_DIR) not in artifacts.STORE.keys()
     df2 = rl.hourly_rollup(spark, SF_DIR, base_dir=base)
     mtimes2 = {
         f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
@@ -276,3 +283,72 @@ def test_hourly_rollup_serves_identical_values_and_reuses_artifact(
             for r in fn(spark, SF_DIR, source="rollup").collect()
         }
         assert inline == served and inline
+
+    # (c) an in-place rewrite of the events table is served from a new
+    # path, and its store entry replaces the old one
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    dst = os.path.join(sf_dir, "events.parquet")
+    shutil.copyfile(os.path.join(SF_DIR, "events.parquet"), dst)
+    rl.hourly_rollup(spark, sf_dir, base_dir=base).count()
+    os.utime(dst, (1, 1))
+    rl.hourly_rollup(spark, sf_dir, base_dir=base).count()
+    assert len(os.listdir(base)) == 3
+    assert [k for k in artifacts.STORE.keys() if k[1] == sf_dir] == [(kind, sf_dir)]
+    artifacts.clear(sf_dir=sf_dir)
+
+
+def test_streaming_twins_share_artifacts_and_follow_rewrites(spark, tmp_path):
+    """The streaming twins score under their batch query's artifacts
+    (the unigram LM and the events value bounds are the SAME store
+    entries, fit once) and, like them, must not serve a stale artifact
+    after an in-place rewrite of their source table."""
+    import shutil
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from multi_report_etl_pipeline_spark import artifacts
+    from multi_report_etl_pipeline_spark.queries import llm_ops
+    from tests.conftest import SF_DIR_MED
+
+    sf_dir = str(tmp_path)
+    for t in ("documents", "events"):
+        shutil.copyfile(
+            os.path.join(SF_DIR_MED, f"{t}.parquet"), os.path.join(sf_dir, f"{t}.parquet")
+        )
+    con = duckdb.connect()
+    con.execute("CREATE SCHEMA tmp")
+    for t in ("documents", "events"):
+        con.execute(f"CREATE VIEW tmp.{t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    pairs = [
+        (llm_ops.QUERIES["docs_unigram_logprob"], QUERIES["streaming_doc_perplexity"]),
+        (llm_ops.QUERIES["docs_quality_logreg"], QUERIES["streaming_quality_logreg"]),
+        (
+            llm_ops.QUERIES["events_binned_percentiles"],
+            QUERIES["streaming_binned_percentiles"],
+        ),
+    ]
+
+    def run_all():
+        for batch, twin in pairs:
+            for spec in (batch, twin):
+                assert_matches_oracle(spec.fn(spark, sf_dir), con, spec.oracle, "tmp")
+        kinds = sorted(k for k, d in artifacts.STORE.keys() if d == sf_dir)
+        assert kinds == ["events_value_bounds", "logreg_weights", "unigram_lm"], kinds
+
+    try:
+        run_all()
+        # rewrite both tables in place: a third of the corpus goes, and
+        # the extreme event values go, so every artifact changes
+        docs = pq.read_table(os.path.join(SF_DIR_MED, "documents.parquet"))
+        pq.write_table(docs.slice(0, 2 * len(docs) // 3), f"{sf_dir}/documents.parquet")
+        ev = pq.read_table(os.path.join(SF_DIR_MED, "events.parquet"))
+        mm = pc.min_max(ev["value"])
+        keep = pc.and_(pc.greater(ev["value"], mm["min"]), pc.less(ev["value"], mm["max"]))
+        pq.write_table(ev.filter(keep), f"{sf_dir}/events.parquet")
+        run_all()
+    finally:
+        artifacts.clear(sf_dir=sf_dir)
+        con.close()

@@ -292,34 +292,39 @@ def test_bucket_facts_cleanup_is_dataset_scoped(spark, tmp_path):
 
 
 def test_read_cache_session_and_fingerprint_invalidation(spark, tmp_path):
-    """The lazy-scan memo (spark._graft_read_cache) must (a) serve the
-    cached plan on a same-session same-fingerprint hit, (b) re-plan
+    """The lazy-scan memo (the session's artifact store) must (a) serve
+    the cached plan on a same-session same-fingerprint hit, (b) re-plan
     when the fixture is rewritten, REPLACING the superseded entry
     rather than accumulating beside it (ADVICE r10), and (c) never
-    serve one session's plan to a different session object — the cache
+    serve one session's plan to a different session object — the store
     hangs off the session itself, so a replaced session starts empty
     and a collected session takes its plans with it (VERDICT r10
-    item 9: the old id(spark)-keyed global could alias a reused id)."""
+    item 9: the old id(spark)-keyed global could alias a reused id).
+    The process store follows the same rule for artifacts owning a
+    scratch dir: (d) a superseded IVF index dir is deleted."""
     import shutil
 
+    from multi_report_etl_pipeline_spark import artifacts
     from multi_report_etl_pipeline_spark import io as io_mod
+    from multi_report_etl_pipeline_spark.queries import llm_ops
 
     sf_dir = str(tmp_path)
     src = os.path.join(SF_DIR, "nation.parquet")
     dst = os.path.join(sf_dir, "nation.parquet")
     shutil.copyfile(src, dst)
 
-    spark._graft_read_cache = {}
+    memo = artifacts.session_store(spark)
+    memo.clear()
     df1 = io_mod.read_table(spark, sf_dir, "nation")
     assert io_mod.read_table(spark, sf_dir, "nation") is df1  # plan memo hit
-    n_entries = len(spark._graft_read_cache)
+    n_entries = len(memo)
 
     # rewrite the fixture in place: fingerprint changes -> new plan,
     # and the superseded entry is REPLACED, not retained
     os.utime(dst, (1, 1))
     df2 = io_mod.read_table(spark, sf_dir, "nation")
     assert df2 is not df1
-    assert len(spark._graft_read_cache) == n_entries, "superseded entry leaked"
+    assert len(memo) == n_entries, "superseded entry leaked"
 
     # a different session object must get its own plan bound to it:
     # newSession() shares the context but is a distinct session, and
@@ -328,8 +333,32 @@ def test_read_cache_session_and_fingerprint_invalidation(spark, tmp_path):
     df3 = io_mod.read_table(other, sf_dir, "nation")
     assert df3 is not df2
     assert df3.sparkSession is other
-    assert len(other._graft_read_cache) == 1
+    assert len(artifacts.session_store(other)) == 1
     # the original session's entry is untouched
     assert io_mod.read_table(spark, sf_dir, "nation") is df2
 
-    spark._graft_read_cache = {}
+    memo.clear()
+
+    # (d) the IVF index is an owned scratch dir: a rewrite of the
+    # embeddings deletes the superseded index and replaces its entry
+    emb = os.path.join(sf_dir, "embeddings.parquet")
+    shutil.copyfile(os.path.join(SF_DIR, "embeddings.parquet"), emb)
+
+    def index_dir():
+        return os.path.dirname(
+            artifacts.get("ivf_index_path", sf_dir, ("embeddings",), lambda: None)
+        )
+
+    try:
+        rows = sorted(map(repr, llm_ops.emb_ivf_indexed_topk(spark, sf_dir).collect()))
+        first = index_dir()
+        assert os.path.isdir(first)
+        os.utime(emb, (1, 1))
+        rerun = llm_ops.emb_ivf_indexed_topk(spark, sf_dir).collect()
+        assert sorted(map(repr, rerun)) == rows
+        assert not os.path.exists(first), "superseded index dir kept"
+        assert os.path.isdir(index_dir())
+        kinds = [k for k, d in artifacts.STORE.keys() if d == sf_dir]
+        assert sorted(kinds) == ["ivf_centroids", "ivf_index_path"], kinds
+    finally:
+        artifacts.clear(sf_dir=sf_dir)

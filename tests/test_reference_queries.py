@@ -108,3 +108,62 @@ def test_materialized_staging_matches_lazy(spark):
         assert "multi_report_etl_pipeline_spark_staging" in plan, plan
     finally:
         reference.clear_materialized_staging()
+
+
+def test_materialized_staging_follows_source_rewrite(spark, tmp_path):
+    """build_staging serves the materialized survivors only while the
+    orders/lineitem fingerprint matches: after an in-place rewrite of
+    lineitem it must equal the lazy path on the new data. Scratch stays
+    bounded: materializing again leaves exactly one survivors dir, and
+    clear_materialized_staging deletes it."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from multi_report_etl_pipeline_spark.queries import reference
+    from tests.conftest import SF_DIR_MED
+
+    def rows_of(df):
+        return sorted(tuple(map(repr, r)) for r in df.collect())
+
+    def survivor_dirs():
+        pattern = os.path.join(
+            tempfile.gettempdir(), "multi_report_etl_pipeline_spark_staging*"
+        )
+        return set(glob.glob(pattern))
+
+    primary = QUERIES["clean_contacts_primary"].fn
+    # d is materialized and then rewritten; lazy_dir holds the same new
+    # data and is never materialized
+    d, lazy_dir = str(tmp_path / "d"), str(tmp_path / "lazy")
+    for sf in (d, lazy_dir):
+        os.makedirs(sf)
+        shutil.copyfile(f"{SF_DIR_MED}/orders.parquet", f"{sf}/orders.parquet")
+    shutil.copyfile(f"{SF_DIR_MED}/lineitem.parquet", f"{d}/lineitem.parquet")
+    before = survivor_dirs()
+    try:
+        reference.materialize_staging(spark, d, n_splits=4)
+        old = rows_of(primary(spark, d))
+        assert len(survivor_dirs() - before) == 1
+
+        lineitem = pq.read_table(f"{SF_DIR_MED}/lineitem.parquet")
+        lineitem = lineitem.slice(0, 2 * len(lineitem) // 3)
+        for sf in (d, lazy_dir):
+            pq.write_table(lineitem, f"{sf}/lineitem.parquet")
+        lazy = rows_of(primary(spark, lazy_dir))
+        assert lazy != old
+        assert rows_of(primary(spark, d)) == lazy
+
+        reference.materialize_staging(spark, d, n_splits=4)
+        df = primary(spark, d)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "multi_report_etl_pipeline_spark_staging" in plan, plan
+        assert rows_of(df) == lazy
+        reference.materialize_staging(spark, d, n_splits=4)
+        assert len(survivor_dirs() - before) == 1
+    finally:
+        reference.clear_materialized_staging(d)
+    assert survivor_dirs() - before == set()
