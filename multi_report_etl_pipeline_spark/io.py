@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def table_fingerprint(path: str) -> object:
     """Cheap fingerprint of a parquet file or part-file directory: the
     invalidation key of every derived artifact (artifacts.Store). A

@@ -2,7 +2,7 @@
 skipping.
 
 Parquet scans prune whole files/row-groups from footer min/max stats
-(Spark pushes comparison filters down, PLANS.md shows ``PushedFilters``)
+(Spark pushes comparison filters down as the scan's ``PushedFilters``)
 — but stats only help if the layout makes them tight. Sorting by one
 column gives perfect pruning on that column and none on any other; at
 100 TB the second-most-selective predicate is usually the expensive one.
@@ -189,7 +189,7 @@ def bucket_facts(
     spark,
     sf_dir: str,
     specs: dict[str, str | tuple[str, ...]] | None = None,
-    n_buckets: int | None = None,
+    n_buckets: int = 64,
     base_dir: str | None = None,
 ) -> dict[str, str]:
     """Persist the big fact tables as hash-BUCKETED saved tables keyed
@@ -238,14 +238,12 @@ def bucket_facts(
     # sound, and without it every merge-join consumer re-sorts the
     # whole fact (measured: a 600M-row 64-way re-sort OOMed q9's
     # composite arm at sf100). The conf is set at SESSION CONSTRUCTION
-    # (session.py get_spark) so flat and bucketed arms of an
-    # interleaved A/B always run under the same planner config; the
-    # set here only covers sessions built outside get_spark (e.g. the
-    # driver's own harness session) where the safety property matters
-    # more than arm symmetry (ADVICE round 9).
+    # (session.py get_spark) so flat and bucketed registry rows always
+    # run under the same planner config; the set here only covers
+    # sessions built outside get_spark (e.g. the driver's own harness
+    # session) where the safety property matters more than that
+    # symmetry (ADVICE round 9).
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.graft.bucketCount", "64"))
     base_dir = base_dir or os.path.join(
         tempfile.gettempdir(), "graft_bucketed_facts"
     )

@@ -720,8 +720,8 @@ def bpe_train_merges(
     # confirmed): per-iteration time 0.36-0.47 s under 256 initial
     # partitions vs 0.21-0.27 s under 32, and the override must cover
     # the persist() call, not just the loop (round-7 instrumented A/B;
-    # scripts/ab_trainer_conf.py measured the scan and broadcast
-    # settings innocent). Restore on exit so the caller's session is
+    # BASELINE.md round 7 measured the scan and broadcast settings
+    # innocent). Restore on exit so the caller's session is
     # untouched.
     init_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     prev_init = spark.conf.get(init_key, None)

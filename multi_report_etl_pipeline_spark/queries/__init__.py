@@ -33,112 +33,6 @@ under these rules, in priority order:
    against DuckDB at sf0.001 regardless of window position), and
    ``scripts/validate.py`` runs the driver-equivalent oracle harness
    over any subset on demand.
-
-Round-11 window derivation:
-- rule 4: the 5 reference-surface rows (unchanged).
-- rule 1 (changed this round): emb_pq_topk (PLAN CHANGED — the exact
-  ADC re-rank moved into the Arrow pass; the ~4,600-literal codebook
-  maps left the plan, plans/r11/emb_pq_topk_{before,after}.txt);
-  tpch_q1_pricing_summary (layout-parameter threading — default flat
-  plan audited identical modulo expression ids, conservative seat).
-- rule 2 (new): tpch_q1_bucketed (the q1 row-group-geometry serving
-  row, 1.18x at sf100, VERDICT r10 item 6).
-- rotation duty (VERDICT r10 item 10 + the r10 docstring's promises):
-  the 3 displaced r5 re-confirmation rows return
-  (customer_fuzzy_matches, lineitem_regression_stats,
-  docs_bigram_vocabulary), and the 4 rows the r10 rule-2 batch
-  displaced return (events_value_percentiles, docs_repetition_stats,
-  docs_split_assignment, docs_mixture_sample).
-  events_value_percentiles is a declared engine-internal approximate:
-  its seat records a rows-only line BY DESIGN, and it replaces
-  lineitem_approx_distinct (demoted after its r10 re-confirmation) as
-  the window's single such row.
-- demoted in exchange (9): r3-remainder re-confirmation rows whose
-  evidence r10 just refreshed to newest-in-registry (docs_chunks,
-  docs_vocabulary, emb_cosine_dedup, docs_hash_sample,
-  docs_stratified_sample, docs_token_packing,
-  events_clicks_before_errors, events_cohort_retention,
-  lineitem_approx_distinct). Kept per rule 5 (second consecutive green
-  on fresh code): docs_lang_divergence, docs_simhash_near_dup,
-  docs_tfidf_top_terms, the r10-changed events/tpch rows, and the r10
-  rule-2 serving rows.
-
-Round-10 window derivation:
-- rule 4: the 5 reference-surface rows.
-- rule 2 (new): lineitem_grouping_sets_bucketed (the row-group-geometry
-  serving row, VERDICT r9 item 8); events_gap_filled_hourly_rollup +
-  events_ewma_anomaly_rollup (the continuous-aggregate serving rows,
-  operators/rollup.py — one persisted hourly rollup, many consumers).
-  Their seats — plus docs_hybrid_rrf_topk's (hybrid lexical+semantic
-  retrieval via reciprocal-rank fusion, composed from the
-  value-oracled BM25 + hash-embedding retrievers) and
-  streaming_hourly_rollup's (the continuous aggregate maintained
-  incrementally — the rollup operator's streaming twin) — displace
-  the last 4 oldest-evidence candidates (events_value_percentiles,
-  docs_repetition_stats, docs_split_assignment, docs_mixture_sample —
-  first in line next round).
-- rule 1 (changed since the round-9 driver run): tpch_q9_bucketed +
-  tpch_q9_product_type_profit (composite-layout gate threaded through
-  the shared body; the serving arm adjudicated at sf100);
-  lineitem_grouping_sets (layout parameter); events_hourly_uniques_sketch
-  + events_hourly_unique_users (hllHash decomposition arms in the shared
-  _hourly_hll_sketch); events_binned_percentiles (empty-input guard,
-  ADVICE r9); events_transition_matrix (NULL-type dictionary guard,
-  ADVICE r9); tpch_q3/q5/q10/q18/q21_bucketed (served from
-  bucket_facts, whose marker format + cleanup scoping changed —
-  conservative seats, plans audited unchanged).
-- rule 1 (optimization phase, added mid-round): docs_lang_divergence
-  (serving plan changed — the (lang, token) aggregate is checkpointed,
-  corpus scans become one construction-time job); docs_simhash_near_dup
-  + emb_pq_topk (expression-authoring rewrites, plans audited
-  unchanged — conservative seats). docs_tfidf_top_terms also changed
-  (df derived from tf) and already held an oldest-evidence seat, which
-  now does double duty. These three seats displace the 3 youngest r5
-  re-confirmation rows (customer_fuzzy_matches,
-  lineitem_regression_stats, docs_bigram_vocabulary — first in line
-  next round).
-- the remaining 28 seats re-confirm the OLDEST driver evidence: the
-  full r3 remainder (11: docs_chunks, docs_vocabulary,
-  docs_tfidf_top_terms, emb_cosine_dedup, docs_hash_sample,
-  docs_stratified_sample, docs_token_packing, lineitem_approx_distinct,
-  events_clicks_before_errors, events_cohort_retention,
-  events_json_props), the full r4 cohort (12), and the 2 oldest r5
-  rows. lineitem_approx_distinct is one of the registry's two
-  remaining declared engine-internal approximates — its seat records a
-  rows-only line BY DESIGN (it has a value-oracled exact counterpart
-  and pytest accuracy gates re-prove it every round; the other,
-  events_value_percentiles, rotates in next round).
-- emb_lsh_ann left the registry entirely (VERDICT r9 item 6) — its
-  recall gate and plan pin remain in pytest.
-
-Round-9 window derivation:
-- rule 4: the 5 reference-surface rows.
-- rule 2 (new this round): tpch_q3_bucketed / tpch_q5_bucketed /
-  tpch_q9_bucketed / tpch_q10_bucketed (the persisted bucketed fact
-  layout's serving rows) and events_hourly_uniques_sketch /
-  events_hourly_top_users_sketch (the sketch-only serving twins for
-  the two pair-shuffle floors, VERDICT r8 item 5).
-- rule 1 (changed since the round-8 driver run):
-  tpch_q3/q5/q9/q10 flat rows (layout threading through _fact +
-  layout-aware _shj_hint — default plans audited unchanged, seats are
-  conservative coverage); customer_rfm_segments + customer_abc_analysis
-  (ranking.py exact `div` bucketing + uniform-weight assertion, ADVICE
-  r8); events_daily_type_pivot + events_daily_type_unpivot +
-  events_gap_filled_hourly + events_ewma_anomaly +
-  events_hourly_unique_users (pmod epoch truncation, ADVICE r8; the
-  uniques row also refactored onto the shared _hourly_hll_sketch);
-  events_transition_matrix (event_type dictionary-encoded through the
-  window shuffle, A/B 6.75 vs 8.46 s); events_binned_percentiles
-  (frozen construct-cached bounds — single scan, VERDICT r8 item 7);
-  docs_lang_divergence (corpus total as broadcast 1-row agg, VERDICT
-  r8 item 4).
-- the remaining 25 seats re-confirm the OLDEST driver evidence in the
-  registry: the r1 pair (customers_without_orders, parts_at_max_size),
-  the full r2 cohort (9), and the 10 oldest r3 rows (docs_chunks/docs_vocabulary/docs_tfidf_top_terms/emb_cosine_dedup rotated to next round when the late q18/q21 bucketed batch claimed their seats) — after this round
-  no seated query's newest evidence predates r3's successors.
-Demoted in exchange: the r8 re-confirmation cohorts (staging/quality,
-TPC-H staples, events/docs-dedup/streaming families — all hash-green
-r08 on code untouched since; pytest re-proves them every round).
 """
 
 from __future__ import annotations
@@ -183,7 +77,7 @@ _WINDOW = (
     "events_ewma_anomaly_rollup",
     "docs_hybrid_rrf_topk",
     "streaming_hourly_rollup",
-    # rule 1 — round-10 changes (see module docstring)
+    # rule 1 — round-10 changes
     "tpch_q9_bucketed",
     "tpch_q9_product_type_profit",
     "lineitem_grouping_sets",

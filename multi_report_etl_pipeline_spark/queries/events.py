@@ -888,7 +888,7 @@ QUERIES.update(
 
 
 def events_gap_filled_hourly(
-    spark: SparkSession, sf_dir: str, source: str | None = None
+    spark: SparkSession, sf_dir: str, source: str = "inline"
 ) -> DataFrame:
     """Time-series gap-fill + LOCF carry-forward — the continuous-
     aggregate completion every monitoring/feature pipeline needs: the
@@ -912,8 +912,6 @@ def events_gap_filled_hourly(
     date_trunc — value-identical under the engine's pinned UTC session
     (session.py), and 1.42x cheaper on the 100M-row scan (sf100ev A/B,
     BASELINE.md round 8: 1.31 -> 0.92 s)."""
-    if source is None:
-        source = spark.conf.get("spark.sql.graft.aggSource", "inline")
     if source == "rollup":
         from multi_report_etl_pipeline_spark.operators.rollup import (  # noqa: PLC0415
             hourly_rollup,
@@ -1058,27 +1056,22 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     not from the EVENT_TYPES constant: a constant dictionary maps
     unseen types to array_position 0 and element_at(_, 0) RAISES
     (caught by the bruteforce property test's generated types).
-    ``spark.sql.graft.transitionNarrow = off`` restores the string
-    plan for interleaved A/Bs. sf100ev A/B: narrow 6.75 s vs string
+    sf100ev A/B against the string-key plan: narrow 6.75 s vs string
     8.46 s min-of-mins (1.25x)."""
     ev = read_table(spark, sf_dir, "events")
-    if spark.conf.get("spark.sql.graft.transitionNarrow", "on") == "off":
-        nxt_src = ev.select("user_id", "ts", "event_id", "event_type")
-        back = lambda c: F.col(c)  # noqa: E731
-    else:
-        tdict = _event_type_dict(spark, sf_dir)
-        type_arr = F.array(*[F.lit(t) for t in tdict])
-        nxt_src = ev.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.array_position(type_arr, F.col("event_type"))
-            .cast("int")
-            .alias("event_type"),
-        )
-        back = lambda c: F.element_at(  # noqa: E731
-            F.array(*[F.lit(t) for t in tdict]), F.col(c)
-        ).alias(c)
+    tdict = _event_type_dict(spark, sf_dir)
+    type_arr = F.array(*[F.lit(t) for t in tdict])
+    nxt_src = ev.select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.array_position(type_arr, F.col("event_type"))
+        .cast("int")
+        .alias("event_type"),
+    )
+    back = lambda c: F.element_at(  # noqa: E731
+        F.array(*[F.lit(t) for t in tdict]), F.col(c)
+    ).alias(c)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = nxt_src.withColumn("next_type", F.lead("event_type").over(w))
     pairs = (
@@ -1119,7 +1112,7 @@ _Z_LOOKBACK = 24
 
 
 def events_ewma_anomaly(
-    spark: SparkSession, sf_dir: str, source: str | None = None
+    spark: SparkSession, sf_dir: str, source: str = "inline"
 ) -> DataFrame:
     """EWMA smoothing + trailing z-score anomaly flags over the dense
     gap-filled hourly series — the monitoring-pipeline shape. All float
@@ -1140,8 +1133,6 @@ def events_ewma_anomaly(
     pre-aggregate is localCheckpoint'd (bounded artifact at any
     scale), and hour truncation is epoch arithmetic (1.42x cheaper per
     scan row than date_trunc under the pinned UTC session)."""
-    if source is None:
-        source = spark.conf.get("spark.sql.graft.aggSource", "inline")
     if source == "rollup":
         from multi_report_etl_pipeline_spark.operators.rollup import (  # noqa: PLC0415
             hourly_rollup,

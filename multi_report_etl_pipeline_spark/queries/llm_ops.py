@@ -4666,21 +4666,13 @@ def _hourly_hll_sketch(ev: DataFrame) -> DataFrame:
     sketch-ONLY serving row). Exchange carries <= |hours| x 256 cells
     at any event volume.
 
-    ``spark.sql.graft.hllHash`` (round 10, VERDICT r9 item 4 — the
-    2.08x decomposition): ``md5`` (default, the engine-portable
-    convention the DuckDB oracle reproduces), ``xxhash64`` (JVM-native
-    64-bit hash, top 48 bits — NOT oracle-portable, decomposition arm
-    that isolates md5's cost), ``raw`` (no hash at all; register/rank
-    from the raw id bits — a scan+agg floor probe, estimates are
-    garbage under non-uniform ids)."""
+    Users hash with ``md5`` (top 48 bits), the engine-portable
+    convention the DuckDB oracle reproduces. The round-10 decomposition
+    (VERDICT r9 item 4, BASELINE.md) measured md5's share of the cost
+    against a JVM-native xxhash64 and an unhashed floor; neither is
+    oracle-portable."""
     m, w = _HLL_REGS, _HLL_SUFFIX_BITS
-    mode = ev.sparkSession.conf.get("spark.sql.graft.hllHash", "md5")
-    if mode == "xxhash64":
-        h = F.shiftrightunsigned(F.xxhash64(F.col("user_id")), 16)
-    elif mode == "raw":
-        h = F.pmod(F.col("user_id").cast("bigint"), F.lit(1 << 48))
-    else:
-        h = dedup._md5_48(F.col("user_id").cast("string"))  # noqa: SLF001
+    h = dedup._md5_48(F.col("user_id").cast("string"))  # noqa: SLF001
     _tl = F.col("ts").cast("timestamp_ltz").cast("long")
     hour_t = F.timestamp_seconds(_tl - F.pmod(_tl, F.lit(3600)))
     regs = (
@@ -4744,8 +4736,6 @@ def _hourly_exact_uniques(spark: SparkSession, sf_dir: str, ev) -> DataFrame:
         .groupBy("hour_t")
         .agg(F.countDistinct("user_id").alias("exact_uniques"))
     )
-    if spark.conf.get("spark.sql.graft.uniquesBitmap", "on") == "off":
-        return fallback
 
     def min_hour() -> int | None:
         row = ev.agg(
@@ -4810,8 +4800,7 @@ def events_hourly_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-hour counts come from 64 popcount-style sums over the 12-row
     segment axis. sf100ev A/B (one sitting, min-of-3 interleaved):
     bitmap 3.45 s vs countDistinct-rewrite 5.91 s (1.72x), values
-    identical. ``spark.sql.graft.uniquesBitmap=off`` restores the
-    countDistinct plan for A/Bs. At 100 TB you keep the sketch column
+    identical. At 100 TB you keep the sketch column
     and drop the exact one (it is the oracle-checked accuracy
     witness); when you DO need windowed-exact at scale, the bitmap
     form is the one that survives (its exchange is user-bounded, not

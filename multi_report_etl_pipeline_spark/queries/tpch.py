@@ -50,38 +50,32 @@ def _shj_hint(
     runtime conversion — below the gate the planner's own broadcast /
     SMJ choice stands unchanged. Gate: the named fact file over 1 GB
     (sf10's 1.37 GB lineitem is the smallest scale that clears it).
-    ``spark.sql.graft.shjGate`` = on / off / auto overrides the gate
-    for interleaved A/Bs without a code edit.
 
-    ``layout="bucketed"``: the hint is suppressed (unless forced on) —
-    both fact sides are already hash-partitioned by the bucket layout,
-    so SortMergeJoin runs with NO exchange and NO sort (SORTED BY, one
-    file per bucket), and a SHUFFLE_HASH hint would only replace the
-    free merge with a per-bucket hash build."""
+    ``layout="bucketed"``: the hint is suppressed — both fact sides are
+    already hash-partitioned by the bucket layout, so SortMergeJoin
+    runs with NO exchange and NO sort (SORTED BY, one file per bucket),
+    and a SHUFFLE_HASH hint would only replace the free merge with a
+    per-bucket hash build."""
     import os  # noqa: PLC0415
 
-    mode = spark.conf.get("spark.sql.graft.shjGate", "auto")
-    if mode == "off":
+    if layout == "bucketed":
         return df
-    if layout == "bucketed" and mode != "on":
+    path = os.path.join(sf_dir, table + ".parquet")
+    try:
+        if os.path.isdir(path):
+            # directory-layout parquet: getsize on the dir entry is
+            # ~4 KB and would silently drop the hint at every scale
+            sz = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(path)
+                for f in files
+            )
+        else:
+            sz = os.path.getsize(path)
+    except OSError:
+        sz = 0
+    if sz <= gate_bytes:
         return df
-    if mode != "on":
-        path = os.path.join(sf_dir, table + ".parquet")
-        try:
-            if os.path.isdir(path):
-                # directory-layout parquet: getsize on the dir entry is
-                # ~4 KB and would silently drop the hint at every scale
-                sz = sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for root, _, files in os.walk(path)
-                    for f in files
-                )
-            else:
-                sz = os.path.getsize(path)
-        except OSError:
-            sz = 0
-        if sz <= gate_bytes:
-            return df
     return df.hint("shuffle_hash")
 
 def _fact(
@@ -92,9 +86,8 @@ def _fact(
     hash-bucketed layout (operators/layout.bucket_facts — the Spark
     port of the reference's CREATE INDEX, 01_staging_layer.sql:13-14),
     building it on first touch of a new fixture fingerprint. Queries
-    default to ``spark.sql.graft.factLayout`` (flat) so fixture-scale
-    plans are unchanged; the bucketed arms are opt-in per query or per
-    session."""
+    default to ``flat``; the bucketed arms are opt-in per query (the
+    ``*_bucketed`` registry rows)."""
     if layout == "bucketed" and table in ("lineitem", "orders"):
         from multi_report_etl_pipeline_spark.operators.layout import (  # noqa: PLC0415
             bucket_facts,
@@ -105,10 +98,6 @@ def _fact(
     return read_table(spark, sf_dir, table)
 
 
-def _layout(spark: SparkSession, layout: str | None) -> str:
-    return layout or spark.conf.get("spark.sql.graft.factLayout", "flat")
-
-
 DEC = "decimal(18,2)"
 
 
@@ -117,7 +106,7 @@ def _dec(col: str):
 
 
 def q1_pricing_summary(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q1 shape: scan-heavy grouped aggregation with derived measures.
 
@@ -139,13 +128,13 @@ def q1_pricing_summary(
     product sums to DECIMAL(38) — and under ANSI mode (our default) an
     overflow raises rather than wrapping.
 
-    ``layout="bucketed"`` (or ``spark.sql.graft.factLayout=bucketed``)
-    serves the scan from the persisted bucketed lineitem table — no
-    plan change beyond the scan; the candidate win is the same
+    ``layout="bucketed"`` serves the scan from the persisted bucketed
+    lineitem table — no plan change beyond the scan; the candidate win
+    is the same
     row-group-geometry effect the grouping-sets A/B measured (round
     10), probed for q1 in round 11 (VERDICT r10 item 6).
     """
-    li = _fact(spark, sf_dir, "lineitem", _layout(spark, layout))
+    li = _fact(spark, sf_dir, "lineitem", layout)
     # x*100 + 0.5 truncated == ROUND(x*100) half-up for these strictly
     # positive 2dp inputs (x*100 lands within 1 ulp of an integer, never
     # at an exact .5), but skips Spark's per-row BigDecimal ROUND —
@@ -202,7 +191,7 @@ GROUP BY l_returnflag, l_linestatus
 
 
 def q3_shipping_priority(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q3 shape: selective 3-way join + grouped revenue + top-10.
 
@@ -242,7 +231,6 @@ def q3_shipping_priority(
     partitioning, TakeOrdered caps the result. Pinned in
     tests/test_plans.py.
     """
-    layout = _layout(spark, layout)
     cust = (
         read_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -310,7 +298,7 @@ LIMIT 10
 
 
 def q5_local_supplier_volume(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q5 shape: 6-way star join with join-filter propagation.
 
@@ -351,7 +339,6 @@ def q5_local_supplier_volume(
     either fact; the custkey shuffle moves downstream to the joined
     (supplier-pruned) rows.
     """
-    layout = _layout(spark, layout)
     region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = read_table(spark, sf_dir, "nation")
     # 5 rows: the ASIA nation keys + display names
@@ -729,8 +716,7 @@ def q9_product_type_profit_bucketed(spark: SparkSession, sf_dir: str) -> DataFra
     sitting: flat 29.27 s -> orders-layout-only 16.87 s (the r9 arm)
     -> composite+orders 8.19 s (3.5x over flat; the composite layout
     alone buys 2.06x). Fresh-JVM ledger pairing, same sitting: 7.76 s
-    vs DuckDB 9.20 = 0.84x — a WIN (probe ratio 1.08).
-    ``spark.sql.graft.q9Composite=off`` restores the r9 arm for A/Bs."""
+    vs DuckDB 9.20 = 0.84x — a WIN (probe ratio 1.08)."""
     return q9_product_type_profit(spark, sf_dir, layout="bucketed")
 
 
@@ -741,7 +727,7 @@ def q1_pricing_summary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (flat fixture: 4,883 ~123k-row groups; bucketed table: 64
     one-per-bucket files with Spark-written 128 MB row groups, fewer
     and dictionary-coherent for the 7-column decode). sf100 interleaved
-    in-JVM A/B (quiet_bench ab, 2 JVMs x A B B A, 48g/tmpfs sitting):
+    A/B (2 JVMs x A B B A, 48g/tmpfs sitting, BASELINE.md round 11):
     flat 7.45/6.99 -> bucketed 6.87/5.93 min-of-3 = **1.18x**,
     consistent across JVMs. Values identical — shares the flat oracle."""
     return q1_pricing_summary(spark, sf_dir, layout="bucketed")
@@ -1288,7 +1274,7 @@ QUERIES["lineitem_regression_stats"] = QuerySpec(
 
 
 def lineitem_grouping_sets(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """Explicit GROUPING SETS — the general form rollup/cube specialize
     (lineitem_rollup / lineitem_cube cover those): per-(flag, status),
@@ -1312,15 +1298,15 @@ def lineitem_grouping_sets(
     has nothing left to reuse; the gap to DuckDB is scan+eval, which
     the cents swap attacks.
 
-    Round 10 (VERDICT r9 item 8): under
-    ``spark.sql.graft.factLayout=bucketed`` the scan serves from the
-    persisted bucketed lineitem table (64 one-per-bucket files with
-    Spark-written 128 MB row groups vs the flat fixture's 4,883
-    ~123k-row groups) — an A/B of row-group geometry on the 3-column
-    scan the r8 decomposition blamed (2.47 s of the 5.65 s total)."""
+    Round 10 (VERDICT r9 item 8): with ``layout="bucketed"`` the scan
+    serves from the persisted bucketed lineitem table (64
+    one-per-bucket files with Spark-written 128 MB row groups vs the
+    flat fixture's 4,883 ~123k-row groups) — an A/B of row-group
+    geometry on the 3-column scan the r8 decomposition blamed (2.47 s
+    of the 5.65 s total)."""
     _register(spark, sf_dir)
     sql = GROUPING_SETS_SPARK_SQL
-    if _layout(spark, layout) == "bucketed":
+    if layout == "bucketed":
         from multi_report_etl_pipeline_spark.operators.layout import (  # noqa: PLC0415
             bucket_facts,
         )
@@ -1474,7 +1460,7 @@ _Q18_MIN_QTY = 200
 
 
 def q18_large_volume_customers(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q18 (large-volume customers): orders whose total lineitem
     quantity exceeds the threshold, with their customer and order
@@ -1496,7 +1482,6 @@ def q18_large_volume_customers(
     partitioning satisfies the groupBy clustering), and the orders
     join zips against the bucketed orders scan; only the |qualifying
     orders| customer join shuffles."""
-    layout = _layout(spark, layout)
     li = _fact(spark, sf_dir, "lineitem", layout)
     ord_ = _fact(spark, sf_dir, "orders", layout)
     cust = read_table(spark, sf_dir, "customer")
@@ -1595,7 +1580,7 @@ QUERIES["orders_trailing_30d_stats"] = QuerySpec(
 
 
 def q10_returned_items(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q10 (returned-item reporting): revenue lost to returns per
     customer over a quarter, top 20 — the 4-way star join
@@ -1618,7 +1603,6 @@ def q10_returned_items(
     persisted orderkey-bucketed layout, so the only data-proportional
     join zips bucket-for-bucket with no exchange and no sort; the only
     remaining shuffles carry post-aggregate custkey rows."""
-    layout = _layout(spark, layout)
     li = _fact(spark, sf_dir, "lineitem", layout).filter(
         F.col("l_returnflag") == "R"
     )
@@ -1735,19 +1719,14 @@ def customer_rfm_segments(
       narrow partial-agg jobs TOTAL, driver traffic <= 9 x 2048 longs
       per round), and the scores become pure in-row comparisons — no
       global sort, no rank materialization, no score join. Replaces
-      the old ``distributed`` (3 x global_ntile parallel range sorts +
+      the old range-sort form (3 x global_ntile parallel range sorts +
       2 joins: 46.7 s / 2.89x at sf100) as the extreme-scale shape.
-    - ``distributed``: the previous range-sort form, kept as a named
-      strategy for the equality pins and as the general-rank fallback
-      (selection needs integral metrics; these are — days, counts,
-      cents).
 
     Equality of all strategies is pinned by tests/test_ranking.py and
     the A/Bs (equal=True at sf1 and sf10). The final segment rollup is
-    a 64-group agg in every strategy."""
+    a 64-group agg in every strategy. An unknown ``strategy`` raises
+    ``ValueError``."""
     import os as _os
-
-    from multi_report_etl_pipeline_spark.operators.ranking import global_ntile
 
     if strategy is None:
         try:
@@ -1755,9 +1734,9 @@ def customer_rfm_segments(
         except OSError:
             sz = 0
         # round-7: the narrow->beyond crossover MEASURED at sf100
-        # (orders 1.76 GB / 15M customers): distributed 46.3 s vs
+        # (orders 1.76 GB / 15M customers): range-sort 46.3 s vs
         # narrow 61.8 s interleaved min-of-3, value-identical —
-        # distributed won or tied every rep pair, so the flip moved
+        # range-sort won or tied every rep pair, so the flip moved
         # from the constructed 5 GB bound down to the measured 1.5 GB.
         # round-8: the beyond-shape is now `selection` (boundary
         # selection, no range sorts — see docstring).
@@ -1767,6 +1746,8 @@ def customer_rfm_segments(
             strategy = "narrow"
         else:
             strategy = "window"
+    if strategy not in ("window", "narrow", "selection"):
+        raise ValueError(f"unknown RFM strategy {strategy!r}")
     ord_ = read_table(spark, sf_dir, "orders")
     cents = F.expr("CAST(o_totalprice * 100 + 0.5 AS BIGINT)")
     per = ord_.groupBy("o_custkey").agg(
@@ -1827,7 +1808,7 @@ def customer_rfm_segments(
                 ),
             )
         )
-    elif strategy == "selection":
+    else:  # selection
         from multi_report_etl_pipeline_spark.operators.ranking import (
             _sql_ntile_cuts,
             ntile_threshold_expr,
@@ -1874,27 +1855,6 @@ def customer_rfm_segments(
                         descending=desc,
                     ),
                 )
-    else:
-        narrow = base.select(
-            "o_custkey", "recency_days", "frequency", "monetary_cents"
-        ).localCheckpoint()  # 3 ranking passes read this once, not 3x
-        n_cust = narrow.count()
-        r = global_ntile(
-            narrow.select("o_custkey", "recency_days"),
-            [F.asc("recency_days"), F.asc("o_custkey")],
-            4, "r_score", n_rows=n_cust,
-        ).select("o_custkey", "r_score")
-        f = global_ntile(
-            narrow.select("o_custkey", "frequency"),
-            [F.desc("frequency"), F.asc("o_custkey")],
-            4, "f_score", n_rows=n_cust,
-        ).select("o_custkey", "f_score")
-        m = global_ntile(
-            narrow.select("o_custkey", "monetary_cents"),
-            [F.desc("monetary_cents"), F.asc("o_custkey")],
-            4, "m_score", n_rows=n_cust,
-        ).select("o_custkey", "m_score", "monetary_cents")
-        scored = m.join(r, "o_custkey").join(f, "o_custkey")
     return (
         scored.groupBy("r_score", "f_score", "m_score")
         .agg(
@@ -2164,18 +2124,22 @@ def customer_abc_analysis(
       no Exchange SinglePartition; the same exact integer boundary
       tests), then classification is a pure in-row comparison. This
       retires the docstring's old "width_bucket escape hatch" IOU with
-      an exact, not approximate, scale path."""
+      an exact, not approximate, scale path.
+
+    An unknown ``strategy`` raises ``ValueError``."""
     import os as _os
 
-    ord_ = read_table(spark, sf_dir, "orders")
-    cents = F.expr("CAST(o_totalprice * 100 + 0.5 AS BIGINT)")
-    per = ord_.groupBy("o_custkey").agg(F.sum(cents).alias("rev"))
     if strategy is None:
         try:
             sz = _os.path.getsize(_os.path.join(sf_dir, "orders.parquet"))
         except OSError:
             sz = 0
         strategy = "selection" if sz > 1_500_000_000 else "window"
+    if strategy not in ("window", "selection"):
+        raise ValueError(f"unknown ABC strategy {strategy!r}")
+    ord_ = read_table(spark, sf_dir, "orders")
+    cents = F.expr("CAST(o_totalprice * 100 + 0.5 AS BIGINT)")
+    per = ord_.groupBy("o_custkey").agg(F.sum(cents).alias("rev"))
     if strategy == "selection":
         from multi_report_etl_pipeline_spark.operators.ranking import (
             cumulative_prefix_expr,
@@ -2779,7 +2743,7 @@ WHERE l_quantity >= 1 AND l_quantity <= 30
 
 
 def q21_suppliers_kept_waiting(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q21: suppliers who alone held up multi-supplier orders
     (EXISTS + NOT EXISTS over the same fact).
@@ -2815,7 +2779,6 @@ def q21_suppliers_kept_waiting(
     with zero exchange — scan, zip-merge, two cascaded partial aggs,
     broadcast supplier probe, TakeOrdered.
     """
-    layout = _layout(spark, layout)
     orders = _fact(spark, sf_dir, "orders", layout).filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
@@ -3353,7 +3316,7 @@ QUERIES["tpch_q2_min_cost_supplier"] = QuerySpec(q2_min_cost_supplier, Q2_SQL)
 
 
 def q9_product_type_profit(
-    spark: SparkSession, sf_dir: str, layout: str | None = None
+    spark: SparkSession, sf_dir: str, layout: str = "flat"
 ) -> DataFrame:
     """TPC-H Q9: profit by supplier nation and order year over one
     product line (p_name LIKE '%bolt%').
@@ -3381,7 +3344,6 @@ def q9_product_type_profit(
     single-copy... which two layouts of lineitem exactly circumvent on
     the scan side.
     """
-    layout = _layout(spark, layout)
     part = F.broadcast(
         read_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%bolt%"))
@@ -3402,15 +3364,7 @@ def q9_product_type_profit(
         )
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    # A/B gate for the composite lineitem layout (round 10, VERDICT r9
-    # item 1): "off" restores the round-9-measured serving arm (flat
-    # lineitem + bucketed orders) so quiet_bench can isolate what the
-    # second layout buys on top of the orders one.
-    composite = (
-        layout == "bucketed"
-        and spark.conf.get("spark.sql.graft.q9Composite", "on") != "off"
-    )
-    if composite:
+    if layout == "bucketed":
         from multi_report_etl_pipeline_spark.operators.layout import (  # noqa: PLC0415
             bucket_facts,
         )

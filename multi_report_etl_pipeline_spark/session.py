@@ -4,8 +4,12 @@ The reference (01_staging_layer.sql:13-14) relies on B-tree indexes for its
 join performance; on Spark the equivalent physical-design levers are AQE
 (runtime join re-planning + skew handling), broadcast joins for small
 deduplicated sides, and a shuffle-partition count sized to the cluster.
-These defaults target local[32] for tests but are the same knobs a
-1000-executor cluster run would set (with bigger numbers).
+Cores and driver heap default to what the host offers; the
+``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM`` and
+``SPARK_GRAFT_LOCAL_DIR`` environment variables override them for a
+deployment, and ``get_spark(extra_conf=...)`` overrides any other conf.
+The same knobs are the ones a 1000-executor cluster run would set (with
+bigger numbers).
 """
 
 from __future__ import annotations
@@ -17,9 +21,19 @@ from pyspark.sql import SparkSession
 
 def _cpus() -> int:
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
+
+
+def _driver_mem() -> str:
+    """16g, capped at three quarters of physical RAM so the OS, the
+    JVM's off-heap and the Python workers keep the rest."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    return f"{max(1024, min(16 << 10, ram_mb * 3 // 4))}m"
 
 
 def get_spark(
@@ -64,10 +78,7 @@ def get_spark(
         # cores, advisory size doing the sizing.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INIT_PARTITIONS",
-                str(8 * (shuffle_partitions or max(cpus, 8))),
-            ),
+            str(8 * (shuffle_partitions or max(cpus, 8))),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Spark's default 10m STATIC broadcast threshold, kept on purpose:
@@ -80,17 +91,14 @@ def get_spark(
         # vs 7.07). AQE converts shuffle joins to broadcasts from ACTUAL
         # runtime sizes, which is both faster here and the only
         # behavior that stays safe when dims grow 100x.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "10m"),
-        )
+        .config("spark.sql.autoBroadcastJoinThreshold", "10m")
         # Runtime bloom-filter join pruning (semi-join reduction): Spark
         # injects a bloom built from the selective side of a shuffle
         # join into the big side's scan, pruning BEFORE the shuffle. On
         # by default but dormant under a 10 GB application-side scan, so
         # mid-size runs never see the plan a 100 TB run gets; lowering
         # the application threshold to 64m aligns them. Round-6 quiet
-        # interleaved A/Bs (scripts/ab_bloom.py, BASELINE.md): the only
+        # interleaved A/Bs (BASELINE.md round 6): the only
         # two injecting queries both win at sf10 (q10 4.63 -> 2.77 s,
         # q21 10.08 -> 7.81 s); at sf1 and below nothing injects (post-
         # pruning scans are under the bar) and the arms are identical —
@@ -100,12 +108,9 @@ def get_spark(
         # maxNumItems row cap still gates selectivity).
         .config(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_APP_THRESHOLD", "64m"),
+            "64m",
         )
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_CREATION_THRESHOLD", "100m"),
-        )
+        .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100m")
         # Shuffle/spill scratch space: SPARK_GRAFT_LOCAL_DIR overrides
         # the JVM-default /tmp. On this single-box harness /tmp is the
         # root disk while the machine has 126 GB of free tmpfs — the
@@ -122,10 +127,10 @@ def get_spark(
         # Bucketed-scan ordering (operators/layout.bucket_facts): the
         # writer enforces one file per bucket, so reporting SORTED BY
         # from bucketed scans is sound; set at construction (not as a
-        # bucket_facts side effect) so flat and bucketed arms of an
-        # interleaved A/B run under identical planner config — ADVICE
-        # round 9 flagged the mid-session set as a measurement-
-        # contamination hazard. Behavior-safe for non-bucketed plans
+        # bucket_facts side effect) so flat and bucketed registry rows
+        # run under identical planner config — ADVICE round 9 flagged
+        # the mid-session set as changing the plans of every query run
+        # after the first bucketed one. Behavior-safe for non-bucketed plans
         # (the conf only affects bucketed table scans).
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -145,29 +150,21 @@ def get_spark(
         # inputs still split at bytesPerCore (sf10 lineitem 1.39 GB / 32
         # cores -> ~43m). The previous fixed 2m cap bought the same
         # small-file parallelism but forced ~700 splits on sf10 lineitem;
-        # the round-6 interleaved tri-scale A/B (scripts/ab_sf10_conf.py,
-        # BASELINE.md round-6 entry) measured the cap pathological there:
+        # the round-6 interleaved tri-scale A/B (BASELINE.md round-6
+        # entry) measured the cap pathological there:
         # B(2m cap) vs E(128m+1m openCost) totals 3.03/2.97 s at sf0.1,
         # 6.67/6.06 at sf1, 39.34/25.35 at sf10 — E wins at every scale
         # (sf10 q3 9.87 -> 2.59 s). On a real cluster these are also the
         # defaults to keep; scan task count is file-count-dominated.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "1m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
         # local mode runs every executor thread inside the driver JVM,
         # whose default heap (1g) OOMs once inputs pass ~sf0.5; on a real
         # cluster this knob is per-executor memory instead. Only takes
         # effect at JVM launch — set the env var before first getOrCreate.
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
+        .config("spark.driver.memory", _driver_mem())
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -1,6 +1,6 @@
 """Measure the DuckDB side of BASELINE.md: run each comparable headline
 query's oracle SQL at $SPARK_GRAFT_SF_DIR (default sf0.1), warm, median
-of 3, and print one JSON line mirroring bench.py's shape. Keeps the
+of 3, and print one JSON line (summed and per-query medians). Keeps the
 DuckDB column of the BASELINE table reproducible on the same box/day as
 the Spark numbers.
 
@@ -23,8 +23,8 @@ import duckdb  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 from multi_report_etl_pipeline_spark.io import TABLES  # noqa: E402
 
-# Headline queries with a DuckDB counterpart (bench.py HEADLINE minus the
-# LSH/IVF family, which has no SQL-expressible equivalent).
+# Headline queries with a DuckDB counterpart (the LSH/IVF family has no
+# SQL-expressible equivalent).
 COMPARABLE = [
     "report_mortgage_portfolio",
     "report_restructuring_pipeline",

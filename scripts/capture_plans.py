@@ -9,10 +9,11 @@ the `_before` files for queries that existed then):
     python scripts/capture_plans.py --suffix after --outdir plans/r10 \
         tpch_q9_bucketed events_hourly_unique_users ...
 
-Optional per-run session confs (e.g. to capture a gated legacy arm):
+Optional per-run Spark session confs, e.g. to capture a plan with
+static broadcasts off:
 
-    python scripts/capture_plans.py --suffix before --outdir plans/r10 \
-        --conf spark.sql.graft.q9Composite=off tpch_q9_bucketed
+    python scripts/capture_plans.py --suffix nobcast --outdir plans/r10 \
+        --conf spark.sql.autoBroadcastJoinThreshold=-1 tpch_q3_shipping_priority
 """
 
 from __future__ import annotations
@@ -48,8 +49,8 @@ def main() -> None:
         k, _, v = kv.partition("=")
         spark.conf.set(k, v)
     registry = all_queries()
-    # reports/clean views read the materialized survivor table on the
-    # bench path; show the plans bench.py actually executes
+    # reports/clean views read the materialized survivor table when
+    # staging is materialized (the reports_daily path); show those plans
     materialize_staging(spark, SF_DIR)
     os.makedirs(args.outdir, exist_ok=True)
     for name in args.queries:

@@ -1639,9 +1639,12 @@ def test_video_near_dup_recovers_planted_twins_and_caps_hot_frame(spark):
 
 
 def test_hourly_exact_uniques_bitmap_matches_countdistinct(spark):
-    """The round-10 bitmap-index exact plan must emit exactly the
-    countDistinct plan's rows on the fixture, and the plan must carry
-    the bitmap shape (bit_or partials, no Expand distinct rewrite)."""
+    """The round-10 bitmap-index exact plan must emit exactly the rows
+    of a plain per-hour countDistinct on the fixture, and the plan must
+    carry the bitmap shape (bit_or partials, no Expand distinct
+    rewrite)."""
+    from pyspark.sql import functions as F
+
     from multi_report_etl_pipeline_spark.io import read_table
     from multi_report_etl_pipeline_spark.queries.llm_ops import (
         _hourly_exact_uniques,
@@ -1649,13 +1652,13 @@ def test_hourly_exact_uniques_bitmap_matches_countdistinct(spark):
 
     ev = read_table(spark, SF_DIR, "events")
     bitmap = _hourly_exact_uniques(spark, SF_DIR, ev)
-    spark.conf.set("spark.sql.graft.uniquesBitmap", "off")
-    try:
-        fallback = _hourly_exact_uniques(spark, SF_DIR, ev)
-    finally:
-        spark.conf.unset("spark.sql.graft.uniquesBitmap")
+    tl = F.col("ts").cast("timestamp_ltz").cast("long")
+    counted = (
+        ev.groupBy(F.timestamp_seconds(tl - F.pmod(tl, F.lit(3600))).alias("hour_t"))
+        .agg(F.countDistinct("user_id").alias("exact_uniques"))
+    )
     a = {(r["hour_t"], r["exact_uniques"]) for r in bitmap.collect()}
-    b = {(r["hour_t"], r["exact_uniques"]) for r in fallback.collect()}
+    b = {(r["hour_t"], r["exact_uniques"]) for r in counted.collect()}
     assert a == b and a
     plan = bitmap._jdf.queryExecution().executedPlan().toString()
     assert "bit_or" in plan, plan[:2000]

@@ -657,10 +657,11 @@ def test_q19_envelope_pushed_to_scan(spark):
     assert "BroadcastHashJoin" in plan, plan[:3000]
 
 
-def test_rfm_distributed_strategy_has_no_single_partition_exchange(spark):
+def test_rfm_selection_strategy_has_no_single_partition_exchange(spark):
     """customer_rfm_segments' scale strategy (auto-picked when orders
-    outgrows ~1 GB): the quartile scores run through operators.ranking
-    (parallel range sort + offsets) — that plan must not funnel
+    outgrows ~1.5 GB): the quartile boundaries come from
+    operators.ranking's batched order-statistic selection and the
+    scores are in-row comparisons — that plan must not funnel
     customers through an Exchange SinglePartition window. The small-
     scale strategy deliberately keeps the plain window form (measured
     faster below the threshold; equality of both pinned in
@@ -670,7 +671,7 @@ def test_rfm_distributed_strategy_has_no_single_partition_exchange(spark):
     )
 
     plan = physical_plan(
-        customer_rfm_segments(spark, SF_DIR, strategy="distributed")
+        customer_rfm_segments(spark, SF_DIR, strategy="selection")
     )
     assert "Exchange SinglePartition" not in plan, plan[:3000]
 
@@ -958,17 +959,24 @@ def test_q20_fact_exchanges_only_on_join_keys(spark):
 def test_shj_gate_respects_scale_and_override(spark):
     """The size-gated SHUFFLE_HASH hints (q3/q5/q10, round 8) must be
     INERT below the 1 GB fact gate — fixture-scale plans keep their
-    broadcast shapes — and must produce ShuffledHashJoin when forced on
-    via the spark.sql.graft.shjGate conf (the A/B override)."""
+    broadcast shapes — and the hint must produce ShuffledHashJoin once
+    the named fact file clears the gate (forced here by a zero gate)."""
+    from pyspark.sql import functions as F
+
+    from multi_report_etl_pipeline_spark.io import read_table
+    from multi_report_etl_pipeline_spark.queries.tpch import _shj_hint
+
     name = "tpch_q3_shipping_priority"
     base = physical_plan(TPCH_QUERIES[name].fn(spark, SF_DIR))
     assert "ShuffledHashJoin" not in base, base[:2000]
-    spark.conf.set("spark.sql.graft.shjGate", "on")
-    try:
-        forced = physical_plan(TPCH_QUERIES[name].fn(spark, SF_DIR))
-        assert "ShuffledHashJoin" in forced, forced[:2000]
-    finally:
-        spark.conf.unset("spark.sql.graft.shjGate")
+    orders = read_table(spark, SF_DIR, "orders")
+    forced = physical_plan(
+        read_table(spark, SF_DIR, "customer").join(
+            _shj_hint(orders, spark, SF_DIR, table="orders", gate_bytes=0),
+            F.col("c_custkey") == F.col("o_custkey"),
+        )
+    )
+    assert "ShuffledHashJoin" in forced, forced[:2000]
 
 
 def test_abc_selection_has_no_single_partition_exchange(spark):

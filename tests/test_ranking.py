@@ -76,25 +76,19 @@ def test_global_ntile_equals_window_ntile(spark):
     assert got == want
 
 
-def test_rfm_strategies_agree(spark):
-    """The window and distributed RFM strategies must be value-identical
-    — the stats-based auto-pick can never change results."""
+@pytest.mark.parametrize(
+    "fn_name", ["customer_rfm_segments", "customer_abc_analysis"]
+)
+@pytest.mark.parametrize("strategy", ["distributed", "selectoin"])
+def test_unknown_strategy_raises(spark, fn_name, strategy):
+    """A misspelled or retired strategy is an error, never a silent
+    fall-through to some other plan."""
     from tests.conftest import SF_DIR
 
-    from multi_report_etl_pipeline_spark.queries.tpch import (
-        customer_rfm_segments,
-    )
+    from multi_report_etl_pipeline_spark.queries import tpch
 
-    a = sorted(
-        map(tuple, customer_rfm_segments(spark, SF_DIR, strategy="window").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            customer_rfm_segments(spark, SF_DIR, strategy="distributed").collect(),
-        )
-    )
-    assert a == b
+    with pytest.raises(ValueError, match="strategy"):
+        getattr(tpch, fn_name)(spark, SF_DIR, strategy=strategy)
 
 
 def test_rfm_selection_strategy_agrees(spark):
