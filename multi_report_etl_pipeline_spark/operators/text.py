@@ -212,21 +212,6 @@ def pii_counts(
     }
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    feats = quality_features(text_col)
-    return df.select(
-        "*",
-        token_count_ws(text_col).alias("n_tokens_ws"),
-        token_count_bpe(text_col).alias("n_tokens_bpe"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        feats["avg_token_len"].alias("avg_token_len"),
-        language_id(text_col).alias("lang_pred"),
-        quality_score(text_col).alias("quality"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 ROLLING_HASH_PRIME = 1125899906842597  # < 2^50: (acc*31 + h48) stays in int64
 
 

@@ -17,22 +17,10 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
 def assert_plan_contains(df: DataFrame, *fragments: str) -> None:
     plan = physical_plan(df)
     missing = [f for f in fragments if f not in plan]
     assert not missing, f"plan is missing {missing}\n---\n{plan[:4000]}"
-
-
-def assert_plan_lacks(df: DataFrame, *fragments: str) -> None:
-    plan = physical_plan(df)
-    present = [f for f in fragments if f in plan]
-    assert not present, f"plan unexpectedly contains {present}\n---\n{plan[:4000]}"
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

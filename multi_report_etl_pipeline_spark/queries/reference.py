@@ -13,6 +13,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from multi_report_etl_pipeline_spark import artifacts, domain, oracle, reports, staging
 from multi_report_etl_pipeline_spark.io import read_table
@@ -43,7 +44,8 @@ def materialize_staging(
     stg_accounts and stg_activities stay lazy: they are narrow maps over
     the raw scans and re-deriving them costs less than writing and
     reading them back. The materialization is a plain parquet path (no
-    catalog) in a scratch dir the artifact store owns: it is served
+    catalog), stored with its schema so reading it starts no job, in a
+    scratch dir the artifact store owns: it is served
     while the orders/lineitem fingerprint matches, and deleted on a
     rewrite of either, by clear_materialized_staging or at exit."""
     import os
@@ -71,10 +73,11 @@ def materialize_staging(
         lineitem, F.broadcast(orders), repartition_by_account=n_splits
     )
 
-    def build(owned: str) -> str:
+    def build(owned: str) -> tuple[str, StructType]:
         path = os.path.join(owned, "contact_survivors")
-        staging.combined_contact_survivors(sact).write.parquet(path)
-        return path
+        survivors = staging.combined_contact_survivors(sact)
+        survivors.write.parquet(path)
+        return path, survivors.schema
 
     artifacts.get(
         _SURVIVORS,
@@ -94,13 +97,15 @@ def clear_materialized_staging(sf_dir: str | None = None) -> None:
 def build_staging(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Raw scans -> domain staging tables -> the five clean views.
 
-    Everything is lazy; calling this repeatedly only rebuilds logical
-    plans (the reference's non-materialized-view model, README.md:116).
-    If materialize_staging() ran for this sf_dir and its sources are
-    unchanged since, the staging tables come from the materialization
-    instead (the reference's CREATE TABLE + CREATE INDEX model) and the
-    window/join exchanges above them disappear. A lookup never
-    materializes: its build is a no-op, which also drops a stale entry.
+    Everything is lazy; calling this only builds logical plans and starts
+    no Spark job. The contact views come in one of two forms of the same
+    specs (staging.contact_view_specs). If materialize_staging() ran for
+    this sf_dir and orders/lineitem are unchanged since, they are struct
+    expansions of the materialized survivors, read with their known
+    schema (the reference's CREATE TABLE + CREATE INDEX model). Otherwise
+    they are the lazy window views (the reference's non-materialized
+    views, README.md:116). A lookup never materializes: its build is a
+    no-op, which also drops a stale entry.
     """
     orders = read_table(spark, sf_dir, "orders")
     stg_accounts = domain.stg_accounts_df(orders)
@@ -108,23 +113,16 @@ def build_staging(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     stg_activities = domain.stg_activities_df(lineitem, orders)
     survivors = artifacts.get(_SURVIVORS, sf_dir, _SURVIVOR_SOURCES, lambda: None)
     if survivors is not None:
-        contact_views = staging.clean_views_from_survivors(
-            spark.read.parquet(survivors)
-        )
+        path, schema = survivors
+        surv = spark.read.schema(schema).parquet(path)
+        contacts = staging.clean_views_from_survivors(surv)
     else:
-        contact_views = {
-            "clean_contacts_primary": staging.clean_contacts_primary(stg_activities),
-            "clean_contacts_field": staging.clean_contacts_field(stg_activities),
-            "clean_contacts_promise": staging.clean_contacts_promise(stg_activities),
-            "clean_contacts_restructure": staging.clean_contacts_restructure(
-                stg_activities
-            ),
-        }
+        contacts = staging.contact_views(stg_activities)
     return {
         "stg_accounts": stg_accounts,
         "stg_activities": stg_activities,
         "clean_accounts": staging.clean_accounts(stg_accounts),
-        **contact_views,
+        **contacts,
     }
 
 

@@ -69,6 +69,34 @@ def _existence_probe(view: DataFrame, marker: str, extra: dict[str, str] | None 
     return view.select(*cols)
 
 
+def _report12_payload() -> list[Column | str]:
+    """The 17 columns reports 1 and 2 project from their join chains
+    before the dedup (the SQL side: oracle._report12_payload)."""
+    return [
+        "account_id",
+        "account_checkdigit",
+        "agent_type",
+        "customer_name",
+        "product_type",
+        "risk_segment",
+        "outstanding_balance",
+        "agent_name",
+        "operation_number",
+        F.coalesce(F.col("c_phone_number"), F.lit("NO_CONTACT")).alias("contact_phone"),
+        F.coalesce(F.col("c_notes"), F.lit("NO_CONTACT")).alias("activity_notes"),
+        _contact_label(F.col("c_contact_type")).alias("contact_type"),
+        F.coalesce(
+            F.date_format(F.col("c_activity_date"), "yyyy-MM-dd"), F.lit("NO_CONTACT")
+        ).alias("last_activity_date"),
+        F.when(F.col("_field_hit").isNotNull(), "YES").otherwise("NO").alias(
+            "field_visit_completed"
+        ),
+        "business_division",
+        "customer_city",
+        "coverage_area",
+    ]
+
+
 def _dedup_one_per_account(df: DataFrame, *order_cols: Column) -> DataFrame:
     w = Window.partitionBy("account_id").orderBy(
         *order_cols, F.col("operation_number").asc()
@@ -95,29 +123,7 @@ def report_mortgage_portfolio(
     f = _existence_probe(clean_contacts_field, "_field_hit")
 
     joined = a.join(c, "account_id", "left").join(f, "account_id", "left")
-    filtered = joined.select(
-        "account_id",
-        "account_checkdigit",
-        "agent_type",
-        "customer_name",
-        "product_type",
-        "risk_segment",
-        "outstanding_balance",
-        "agent_name",
-        "operation_number",
-        F.coalesce(F.col("c_phone_number"), F.lit("NO_CONTACT")).alias("contact_phone"),
-        F.coalesce(F.col("c_notes"), F.lit("NO_CONTACT")).alias("activity_notes"),
-        _contact_label(F.col("c_contact_type")).alias("contact_type"),
-        F.coalesce(
-            F.date_format(F.col("c_activity_date"), "yyyy-MM-dd"), F.lit("NO_CONTACT")
-        ).alias("last_activity_date"),
-        F.when(F.col("_field_hit").isNotNull(), "YES").otherwise("NO").alias(
-            "field_visit_completed"
-        ),
-        "business_division",
-        "customer_city",
-        "coverage_area",
-    )
+    filtered = joined.select(*_report12_payload())
     deduped = _dedup_one_per_account(filtered, F.col("risk_segment").desc())
     return deduped.select(F.lit(COMPANY).alias("company"), "*")
 
@@ -145,29 +151,7 @@ def report_restructuring_pipeline(
         .join(r, "account_id", "left")
         .filter(F.col("r_contact_type") == "RESTRUCTURE")
     )
-    filtered = joined.select(
-        "account_id",
-        "account_checkdigit",
-        "agent_type",
-        "customer_name",
-        "product_type",
-        "risk_segment",
-        "outstanding_balance",
-        "agent_name",
-        "operation_number",
-        F.coalesce(F.col("c_phone_number"), F.lit("NO_CONTACT")).alias("contact_phone"),
-        F.coalesce(F.col("c_notes"), F.lit("NO_CONTACT")).alias("activity_notes"),
-        _contact_label(F.col("c_contact_type")).alias("contact_type"),
-        F.coalesce(
-            F.date_format(F.col("c_activity_date"), "yyyy-MM-dd"), F.lit("NO_CONTACT")
-        ).alias("last_activity_date"),
-        F.when(F.col("_field_hit").isNotNull(), "YES").otherwise("NO").alias(
-            "field_visit_completed"
-        ),
-        "business_division",
-        "customer_city",
-        "coverage_area",
-    )
+    filtered = joined.select(*_report12_payload())
     deduped = _dedup_one_per_account(
         filtered, F.col("product_type").asc(), F.col("risk_segment").desc()
     )

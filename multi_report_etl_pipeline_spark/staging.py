@@ -1,24 +1,25 @@
-"""Staging layer: five cleansing/dedup views, as pure DataFrame -> DataFrame
-builders (reference: /root/reference/01_staging_layer.sql).
+"""Staging layer: the five cleansing/dedup views as DataFrame builders
+(reference: /root/reference/01_staging_layer.sql).
 
 Design notes (Spark-first, not a translation):
 
-- Each builder is a lazy logical plan; ``register_staging_views`` exposes
-  them as temp views — the exact analog of the reference's
-  non-materialized ``CREATE VIEW`` (01:23-25; README.md:116).
-- The reference's dedup strategy — one ROW_NUMBER window per view, keep
-  rank 1 (01:124-146) — maps to ``Window.partitionBy('account_id')``.
-  Spark's WindowExec is sort-based and spillable, and modern Catalyst
-  rewrites ``row_number() = 1`` filters into a per-group top-1 limit
-  (InferWindowGroupLimit), so this is already the scalable plan at 100 TB:
-  one hash exchange per view on account_id, no self-joins.
-- Pre-window filters (channel/outcome; 01:190, 274, 358) stay *below* the
-  window exactly as in the reference so they reach the Parquet scan as
-  pushed filters.
+- ``clean_accounts`` is a projection. Each of the four contact views is
+  one ``ContactView`` spec in ``contact_view_specs``: its pre-filter, its
+  channel/contact-type labels and its sort order. A change to a view's
+  semantics is an edit in one place.
+- Two physical forms derive from the specs, each faster on some workload.
+  ``contact_views`` is the lazy form, the analog of the reference's
+  non-materialized ``CREATE VIEW`` (01:23-25; README.md:116): one
+  ``row_number()`` window per view with the filter below it, so the
+  filter reaches the parquet scan and ``row_number() = 1`` compiles to a
+  per-group top-1 limit (WindowGroupLimit). ``combined_contact_survivors``
+  computes all four views in ONE ``min_by`` partial aggregation per
+  account (filters folded into the keys), the form that is materialized
+  and streamed; ``clean_views_from_survivors`` expands it back into views.
 - ⚠ Determinism: the reference's window ORDER BYs are partial orders —
   ties leave the surviving row engine-dependent (SURVEY.md §2.5). Every
-  window here appends ``activity_id ASC`` (a unique key) so the order is
-  total and the DuckDB differential oracle can hash-match.
+  view appends ``activity_id ASC, row_fp ASC`` (row_fp is unique) so the
+  order is total and the DuckDB differential oracle can hash-match.
 - All date work is ``try_to_date(col, 'dd/MM/yyyy')``: same null-on-
   malformed behavior as SQLite's ``DATE(SUBSTR...)`` pipeline (01:64-68)
   without the string surgery.
@@ -26,7 +27,9 @@ Design notes (Spark-first, not a translation):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ACTIVITY_OUTPUT_COLS = [
@@ -47,15 +50,6 @@ ACTIVITY_OUTPUT_COLS = [
 ]
 
 METRO_AREAS = ("METRO_AREA_1", "METRO_AREA_2", "METRO_AREA_3")
-
-CHANNEL_PRIORITY = {
-    "PHONE": "01.PHONE",
-    "FIELD": "02.FIELD",
-    "MESSAGING": "03.MESSAGING",
-    "EMAIL": "04.EMAIL",
-    "AGENT_BANK": "05.AGENT_BANK",
-}
-
 
 def parse_ddmmyyyy(col: Column | str) -> Column:
     """DD/MM/YYYY string -> DateType, NULL on malformed input.
@@ -124,266 +118,139 @@ def clean_accounts(stg_accounts: DataFrame) -> DataFrame:
     )
 
 
-def _preprocessed(stg_activities: DataFrame, contact_expr: Column) -> DataFrame:
-    """Shared contact_preprocessing projection (01:60-107)."""
-    return stg_activities.select(
-        "account_id",
-        "activity_id",
-        "row_fp",
-        parse_ddmmyyyy("activity_date").alias("activity_date"),
-        "activity_time",
-        parse_ddmmyyyy("next_activity_date").alias("next_activity_date"),
-        channel_priority("collection_channel").alias("collection_channel"),
-        contact_expr.alias("contact_type"),
-        "contact_outcome",
-        "non_payment_reason",
-        "contact_location",
-        "next_action",
-        "notes",
-        "phone_number",
-        "department",
-        "agent_name",
-    )
-
-
-def _top1(df: DataFrame, *order_cols: Column) -> DataFrame:
-    """Keep the first row per account under a TOTAL order (activity_id,
-    then the unique row_fp fingerprint appended — activity_id alone is
-    duplicated in the raw data). filter(row_number()=1) compiles to a
-    per-group limit (WindowGroupLimit) — no second pass over the data."""
-    w = (
-        Window.partitionBy("account_id")
-        .orderBy(*order_cols, F.col("activity_id").asc(), F.col("row_fp").asc())
-    )
-    return (
-        df.withColumn("row_num", F.row_number().over(w))
-        .filter(F.col("row_num") == 1)
-        .select(*ACTIVITY_OUTPUT_COLS)
-    )
-
-
-def clean_contacts_primary(stg_activities: DataFrame) -> DataFrame:
-    """View 2 (01:59-146): latest *relevant* contact per account — channel
-    priority ASC, contact-type priority ASC, recency DESC."""
-    pre = _preprocessed(
-        stg_activities,
-        contact_type_normalized(
-            F.col("contact_type"), F.col("collection_channel"), F.col("agent_name")
-        ),
-    )
-    return _top1(
-        pre,
-        F.col("collection_channel").asc(),
-        F.col("contact_type").asc(),
-        F.col("activity_date").desc_nulls_last(),
-    )
-
-
-def clean_contacts_field(stg_activities: DataFrame) -> DataFrame:
-    """View 3 (01:157-230): latest field visit. The channel filter sits
-    below the window, as in the reference (01:190), so it pushes to scan."""
-    pre = stg_activities.filter(F.col("collection_channel") == "FIELD").select(
-        "account_id",
-        "activity_id",
-        "row_fp",
-        parse_ddmmyyyy("activity_date").alias("activity_date"),
-        "activity_time",
-        parse_ddmmyyyy("next_activity_date").alias("next_activity_date"),
-        F.lit("02.FIELD").alias("collection_channel"),
-        field_contact_type(F.col("contact_type"), F.col("agent_name")).alias("contact_type"),
-        "contact_outcome",
-        "non_payment_reason",
-        "contact_location",
-        "next_action",
-        "notes",
-        "phone_number",
-        "department",
-        "agent_name",
-    )
-    return _top1(
-        pre,
-        F.col("contact_type").asc(),
-        F.col("activity_date").desc_nulls_last(),
-    )
-
-
-def _outcome_view(stg_activities: DataFrame, outcome: str, label: str) -> DataFrame:
-    """Views 4/5 (01:241-398): latest promise / restructure request."""
-    pre = stg_activities.filter(F.col("contact_outcome") == outcome).select(
-        "account_id",
-        "activity_id",
-        "row_fp",
-        parse_ddmmyyyy("activity_date").alias("activity_date"),
-        "activity_time",
-        parse_ddmmyyyy("next_activity_date").alias("next_activity_date"),
-        channel_priority("collection_channel").alias("collection_channel"),
-        F.lit(label).alias("contact_type"),
-        "contact_outcome",
-        "non_payment_reason",
-        "contact_location",
-        "next_action",
-        "notes",
-        "phone_number",
-        "department",
-        "agent_name",
-    )
-    return _top1(
-        pre,
-        F.col("activity_date").desc_nulls_last(),
-        F.col("activity_time").desc(),
-    )
-
-
-def clean_contacts_promise(stg_activities: DataFrame) -> DataFrame:
-    return _outcome_view(stg_activities, "PAYMENT_PROMISE", "PROMISE")
-
-
-def clean_contacts_restructure(stg_activities: DataFrame) -> DataFrame:
-    return _outcome_view(stg_activities, "RESTRUCTURE_REQUEST", "RESTRUCTURE")
-
-
 # ---------------------------------------------------------------------------
-# Single-pass combined survivors: all four contact views are top-1-per-
-# account selections, i.e. aggregations — min_by(payload, order_key).
-# One groupBy(account_id) computes all four at once, and because min_by
-# is a partial-aggregable function, each map partition collapses to <=1
-# row per account per view BEFORE the exchange: only ~n_accounts tiny
-# pre-aggregated rows cross the shuffle and nothing is ever globally
-# sorted. At 100 TB that is the difference between shuffle+sorting the
-# fact table four times (the window formulation) and shuffling one small
-# row per account. The lazy per-view window builders above stay the
-# reference semantics; the parity test pins the two paths equal.
-#
-# Each view's DESC sort keys are re-encoded as ascending integers so one
-# lexicographic struct comparison reproduces the exact window order:
-#   activity_date DESC NULLS LAST -> coalesce(-unix_date(d), INT_MAX)
-#   activity_time DESC ('HH:MM:SS' fixed-width, digits-only)
-#                                 -> coalesce(-int('HHMMSS'), LONG_MAX)
-# ASC string keys (channel/type priority labels) compare natively. The
-# unique (activity_id, row_fp) suffix makes every key total, so min_by
-# ties are impossible and the survivor is deterministic.
+# The four contact views (01:59-398), each stated once.
 
 
-def _survivor_keys() -> dict[str, Column]:
-    """Per-view ascending order-key structs (null key = row not in view)."""
-    date_enc = F.coalesce(
-        -F.unix_date(parse_ddmmyyyy("activity_date")), F.lit(2147483647)
-    )
-    time_enc = F.coalesce(
-        -F.translate(F.col("activity_time"), ":", "").cast("bigint"),
-        F.lit(2**62),
-    )
+@dataclass(frozen=True)
+class ContactView:
+    """One contact view: the rows matching ``keep`` (all rows when None),
+    labelled with ``channel`` and ``contact_type``, top-1 per account
+    under ``order`` and then the unique (activity_id, row_fp) tiebreak.
+    ``order`` names output columns; a leading "-" means DESC NULLS LAST,
+    otherwise ASC."""
+
+    keep: Column | None
+    channel: Column
+    contact_type: Column
+    order: tuple[str, ...]
+
+
+def contact_view_specs() -> dict[str, ContactView]:
+    """The four specs (built per call: a Column needs a live session)."""
     chan = channel_priority("collection_channel")
-    tnorm = contact_type_normalized(
-        F.col("contact_type"), F.col("collection_channel"), F.col("agent_name")
-    )
-    tfield = field_contact_type(F.col("contact_type"), F.col("agent_name"))
-    tie = (F.col("activity_id"), F.col("row_fp"))
+    contact, agent = F.col("contact_type"), F.col("agent_name")
+    by_recency = ("-activity_date", "-activity_time")
     return {
-        "p_primary": F.struct(chan, tnorm, date_enc, *tie),
-        "p_field": F.when(
-            F.col("collection_channel") == "FIELD", F.struct(tfield, date_enc, *tie)
+        "clean_contacts_primary": ContactView(
+            None,
+            chan,
+            contact_type_normalized(contact, F.col("collection_channel"), agent),
+            ("collection_channel", "contact_type", "-activity_date"),
         ),
-        "p_promise": F.when(
+        "clean_contacts_field": ContactView(
+            F.col("collection_channel") == "FIELD",
+            F.lit("02.FIELD"),
+            field_contact_type(contact, agent),
+            ("contact_type", "-activity_date"),
+        ),
+        "clean_contacts_promise": ContactView(
             F.col("contact_outcome") == "PAYMENT_PROMISE",
-            F.struct(date_enc, time_enc, *tie),
+            chan,
+            F.lit("PROMISE"),
+            by_recency,
         ),
-        "p_restructure": F.when(
+        "clean_contacts_restructure": ContactView(
             F.col("contact_outcome") == "RESTRUCTURE_REQUEST",
-            F.struct(date_enc, time_enc, *tie),
+            chan,
+            F.lit("RESTRUCTURE"),
+            by_recency,
         ),
     }
 
 
-# Payload fields shared by all four views (per-view channel/type labels are
-# picked out of the struct at extraction time).
-_SURVIVOR_PASSTHROUGH = [
-    "contact_outcome",
-    "non_payment_reason",
-    "contact_location",
-    "next_action",
-    "notes",
-    "phone_number",
-    "department",
-    "agent_name",
-]
+_DATE_COLS = ("activity_date", "next_activity_date")
+_TIEBREAK = ("activity_id", "row_fp")
+
+
+def _projection(view: ContactView) -> dict[str, Column]:
+    """The view's output columns after account_id, over stg_activities."""
+    labels = {"collection_channel": view.channel, "contact_type": view.contact_type}
+    return {
+        c: parse_ddmmyyyy(c) if c in _DATE_COLS else labels.get(c, F.col(c))
+        for c in ACTIVITY_OUTPUT_COLS[1:]
+    }
+
+
+def contact_views(stg_activities: DataFrame) -> dict[str, DataFrame]:
+    """The lazy form: one row_number() window per view. The view's filter
+    sits below the window, as in the reference (01:190, 274, 358), so it
+    reaches the parquet scan, and filter(row_num = 1) compiles to a
+    per-group limit (WindowGroupLimit): no second pass over the data."""
+    views = {}
+    for name, view in contact_view_specs().items():
+        rows = stg_activities if view.keep is None else stg_activities.filter(view.keep)
+        order = [
+            F.col(t[1:]).desc_nulls_last() if t.startswith("-") else F.col(t).asc()
+            for t in view.order
+        ]
+        w = Window.partitionBy("account_id").orderBy(
+            *order, *(F.col(c).asc() for c in _TIEBREAK)
+        )
+        views[name] = (
+            rows.select(
+                "account_id",
+                *_TIEBREAK,
+                *(col.alias(c) for c, col in _projection(view).items()),
+            )
+            .withColumn("row_num", F.row_number().over(w))
+            .filter(F.col("row_num") == 1)
+            .select(*ACTIVITY_OUTPUT_COLS)
+        )
+    return views
+
+
+def _ascending(cols: dict[str, Column], term: str) -> Column:
+    """One order term as an ascending key. ASC terms compare natively.
+    DESC NULLS LAST dates become -unix_date, NULL past the end. DESC NULLS
+    LAST strings become their UTF-8 bytes as hex with every digit
+    complemented, then 'G': binary order reversed, a proper prefix after
+    its extensions, no cast that malformed input could fail; NULL maps to
+    'H', past every encoding."""
+    if not term.startswith("-"):
+        return cols[term]
+    c = cols[term[1:]]
+    if term[1:] in _DATE_COLS:
+        return F.coalesce(-F.unix_date(c), F.lit(2147483647))
+    flipped = F.translate(F.hex(c), "0123456789ABCDEF", "FEDCBA9876543210")
+    return F.coalesce(F.concat(flipped, F.lit("G")), F.lit("H"))
 
 
 def combined_contact_survivors(stg_activities: DataFrame) -> DataFrame:
-    """Every contact view's survivor row in ONE partial-agg pass:
-    one row per account with four (nullable) payload structs."""
-    payload = F.struct(
-        parse_ddmmyyyy("activity_date").alias("activity_date"),
-        F.col("activity_time").alias("activity_time"),
-        parse_ddmmyyyy("next_activity_date").alias("next_activity_date"),
-        channel_priority("collection_channel").alias("channel_prio"),
-        contact_type_normalized(
-            F.col("contact_type"), F.col("collection_channel"), F.col("agent_name")
-        ).alias("type_norm"),
-        field_contact_type(F.col("contact_type"), F.col("agent_name")).alias(
-            "type_field"
-        ),
-        *(F.col(c).alias(c) for c in _SURVIVOR_PASSTHROUGH),
-    )
-    keys = _survivor_keys()
-    return stg_activities.groupBy("account_id").agg(
-        *(F.min_by(payload, key).alias(name) for name, key in keys.items())
-    )
+    """The survivors form: every contact view's top-1 row in ONE
+    groupBy(account_id) pass, as min_by(payload, key) with the view's
+    filter folded into its key (a NULL key is a row outside the view).
+    min_by aggregates partially, so each map partition collapses to <=1
+    row per account per view before the exchange and nothing is globally
+    sorted. One row per account, one nullable payload struct per view,
+    named after it; the unique tiebreak makes every key total."""
+    aggs = []
+    for name, view in contact_view_specs().items():
+        cols = _projection(view)
+        key = F.struct(
+            *(_ascending(cols, t) for t in view.order), *(F.col(c) for c in _TIEBREAK)
+        )
+        if view.keep is not None:
+            key = F.when(view.keep, key)
+        payload = F.struct(*(col.alias(c) for c, col in cols.items()))
+        aggs.append(F.min_by(payload, key).alias(name))
+    return stg_activities.groupBy("account_id").agg(*aggs)
 
 
 def clean_views_from_survivors(survivors: DataFrame) -> dict[str, DataFrame]:
-    """The four contact views as cheap struct-expansions over the
-    survivor table (column order matches ACTIVITY_OUTPUT_COLS exactly)."""
-
-    def extract(field: str, channel, ctype) -> DataFrame:
-        p = F.col(field)
-        return survivors.filter(p.isNotNull()).select(
-            "account_id",
-            p["activity_date"].alias("activity_date"),
-            p["activity_time"].alias("activity_time"),
-            p["next_activity_date"].alias("next_activity_date"),
-            channel(p).alias("collection_channel"),
-            ctype(p).alias("contact_type"),
-            *(p[c].alias(c) for c in _SURVIVOR_PASSTHROUGH),
-        )
-
-    chan = lambda p: p["channel_prio"]  # noqa: E731
+    """The four contact views as struct expansions over a
+    combined_contact_survivors table (columns as ACTIVITY_OUTPUT_COLS)."""
     return {
-        "clean_contacts_primary": extract(
-            "p_primary", chan, lambda p: p["type_norm"]
-        ),
-        "clean_contacts_field": extract(
-            "p_field", lambda p: F.lit("02.FIELD"), lambda p: p["type_field"]
-        ),
-        "clean_contacts_promise": extract(
-            "p_promise", chan, lambda p: F.lit("PROMISE")
-        ),
-        "clean_contacts_restructure": extract(
-            "p_restructure", chan, lambda p: F.lit("RESTRUCTURE")
-        ),
+        name: survivors.filter(F.col(name).isNotNull()).select("account_id", f"{name}.*")
+        for name in contact_view_specs()
     }
-
-
-STAGING_BUILDERS = {
-    "clean_accounts": clean_accounts,
-    "clean_contacts_primary": clean_contacts_primary,
-    "clean_contacts_field": clean_contacts_field,
-    "clean_contacts_promise": clean_contacts_promise,
-    "clean_contacts_restructure": clean_contacts_restructure,
-}
-
-
-def register_staging_views(
-    spark: SparkSession, stg_accounts: DataFrame, stg_activities: DataFrame
-) -> dict[str, DataFrame]:
-    """Materialize nothing; register the five lazy views (README.md:116)."""
-    views = {
-        "clean_accounts": clean_accounts(stg_accounts),
-        "clean_contacts_primary": clean_contacts_primary(stg_activities),
-        "clean_contacts_field": clean_contacts_field(stg_activities),
-        "clean_contacts_promise": clean_contacts_promise(stg_activities),
-        "clean_contacts_restructure": clean_contacts_restructure(stg_activities),
-    }
-    for name, df in views.items():
-        df.createOrReplaceTempView(name)
-    return views

@@ -65,6 +65,10 @@ def _activities_df(spark, rows):
     return spark.createDataFrame(rows, schema=schema)
 
 
+def _primary(df):
+    return staging.contact_views(df)["clean_contacts_primary"].collect()
+
+
 def test_malformed_dates_sort_last_and_null(spark):
     """All-malformed account keeps one row with NULL date; a valid date
     beats a malformed one under DESC NULLS LAST."""
@@ -77,7 +81,7 @@ def test_malformed_dates_sort_last_and_null(spark):
             _activity(account_id=2, activity_id=4, activity_date="01/01/2020"),
         ],
     )
-    out = {r.account_id: r for r in staging.clean_contacts_primary(df).collect()}
+    out = {r.account_id: r for r in _primary(df)}
     assert out[1].activity_date is None  # deterministic survivor, null date
     assert str(out[2].activity_date) == "2020-01-01"  # valid date wins
 
@@ -92,7 +96,7 @@ def test_tie_broken_by_activity_id(spark):
             _activity(account_id=1, activity_id=3, notes="early"),
         ],
     )
-    out = staging.clean_contacts_primary(df).collect()
+    out = _primary(df)
     assert len(out) == 1 and out[0].notes == "early"
 
 
@@ -106,7 +110,7 @@ def test_auto_dialer_beats_no_contact_arm(spark):
                       contact_type="SOMETHING_NEW"),
         ],
     )
-    out = {r.account_id: r for r in staging.clean_contacts_primary(df).collect()}
+    out = {r.account_id: r for r in _primary(df)}
     assert out[1].contact_type == "04.AUTO_DIALER"
     assert out[2].contact_type == "03.NO_CONTACT"
     assert out[3].collection_channel == "UNCLASSIFIED_CHANNEL"
@@ -121,7 +125,7 @@ def test_null_account_ids_form_single_group(spark):
             _activity(account_id=None, activity_id=2),
         ],
     )
-    out = staging.clean_contacts_primary(df).collect()
+    out = _primary(df)
     assert len(out) == 1  # NULL keys group together (matches both hosts)
 
 
@@ -146,10 +150,11 @@ def test_account_without_contacts_gets_sentinels(spark):
         ]
     )
     empty = _activities_df(spark, [_activity(account_id=999)])
+    views = staging.contact_views(empty)
     report = reports.report_mortgage_portfolio(
         staging.clean_accounts(accounts),
-        staging.clean_contacts_primary(empty),
-        staging.clean_contacts_field(empty),
+        views["clean_contacts_primary"],
+        views["clean_contacts_field"],
     ).collect()
     assert len(report) == 1
     row = report[0]
@@ -181,10 +186,11 @@ def test_report_dedup_keeps_worst_risk_then_lowest_operation(spark):
     )
     accounts = spark.createDataFrame([mk(10, "B"), mk(11, "E"), mk(12, "E")])
     empty = _activities_df(spark, [_activity(account_id=999)])
+    views = staging.contact_views(empty)
     report = reports.report_mortgage_portfolio(
         staging.clean_accounts(accounts),
-        staging.clean_contacts_primary(empty),
-        staging.clean_contacts_field(empty),
+        views["clean_contacts_primary"],
+        views["clean_contacts_field"],
     ).collect()
     assert len(report) == 1
     assert (report[0].risk_segment, report[0].operation_number) == ("E", 11)
@@ -201,15 +207,16 @@ def test_duplicate_activity_id_broken_by_row_fp(spark):
             _activity(account_id=1, activity_id=5, row_fp=100, notes="early"),
         ],
     )
-    out = staging.clean_contacts_primary(df).collect()
+    out = _primary(df)
     assert len(out) == 1 and out[0].notes == "early"
 
 
 def test_clean_views_invariant_under_input_permutation(spark):
-    """Dedup windows must be total orders: reshuffling the input rows
-    (different partitioning AND different within-partition order) may
-    never change any clean view's output. This is the regression net for
-    the duplicated-activity_id class of bug that row_fp closes."""
+    """Dedup orders must be total: reshuffling the input rows (different
+    partitioning AND different within-partition order) may never change
+    any clean view's output, in either physical form (lazy windows,
+    min_by survivors), and the two forms agree. This is the regression
+    net for the duplicated-activity_id class of bug that row_fp closes."""
     import random
 
     from multi_report_etl_pipeline_spark.queries.reference import build_staging
@@ -221,15 +228,19 @@ def test_clean_views_invariant_under_input_permutation(spark):
         shuffled = rows[:]
         random.Random(seed).shuffle(shuffled)
         df = spark.createDataFrame(shuffled, base.schema).repartition(seed + 2)
-        got = {
-            name: sorted(tuple(map(repr, r)) for r in fn(df).collect())
-            for name, fn in staging.STAGING_BUILDERS.items()
-            if name != "clean_accounts"
-        }
-        if want is None:
-            want = got
-        else:
-            assert got == want, "clean view changed under input permutation"
+        forms = (
+            staging.contact_views(df),
+            staging.clean_views_from_survivors(staging.combined_contact_survivors(df)),
+        )
+        for views in forms:
+            got = {
+                name: sorted(tuple(map(repr, r)) for r in view.collect())
+                for name, view in views.items()
+            }
+            if want is None:
+                want = got
+            else:
+                assert got == want, "clean view changed under input permutation"
 
 
 def test_new_operators_handle_empty_inputs(spark):

@@ -3,7 +3,8 @@ not behind a session conf or an environment switch, so the package
 reads no ``spark.sql.graft.*`` conf and no environment variable other
 than the three deployment settings of ``session.py``, and no script
 imports the deleted ``bench`` harness. Plus the host-fitted session
-defaults those deployment settings override."""
+defaults those deployment settings override, and one statement of each
+contact view in ``staging.py``."""
 
 from __future__ import annotations
 
@@ -106,3 +107,15 @@ def test_session_defaults_fit_host(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "4g")
     assert session._cpus() == 3  # noqa: SLF001
     assert session._driver_mem() == "4g"  # noqa: SLF001
+
+
+def test_contact_view_labels_stated_once():
+    """Each outcome filter and outcome label of the contact views is one
+    string constant in staging.py: both physical forms derive from one
+    spec per view, so a second copy means the semantics forked again."""
+    path = os.path.join(REPO_ROOT, "multi_report_etl_pipeline_spark", "staging.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    consts = [n.value for n in ast.walk(tree) if isinstance(n, ast.Constant)]
+    for label in ("PAYMENT_PROMISE", "RESTRUCTURE_REQUEST", "PROMISE", "RESTRUCTURE"):
+        assert consts.count(label) == 1, (label, consts.count(label))

@@ -222,7 +222,36 @@ _CHANNELS = ["PHONE", "FIELD", "MESSAGING", "EMAIL", "AGENT_BANK", "WHATSAPP"]
 _CONTACTS = ["PRIMARY", "THIRD_PARTY", "NO_CONTACT", "GUARANTOR", "UNKNOWN_TYPE"]
 _OUTCOMES = ["PAYMENT_PROMISE", "RESTRUCTURE_REQUEST", "NO_ANSWER", "CALLBACK"]
 _DATES = ["15/06/2025", "14/06/2025", "31/02/2025", "GARBAGE", "01/01/2020"]
-_TIMES = ["10:00:00", "10:00:00", "23:59:59", "00:00:01"]
+# '9:05:00' sorts after '10:00:00' as a string (the reference orders the
+# raw string DESC); 'junk' and None must neither fail nor sort first
+_TIMES = ["10:00:00", "10:00:00", "23:59:59", "00:00:01", "9:05:00", "junk", None]
+
+
+def _rows(df):
+    return sorted(tuple(map(repr, r)) for r in df.collect())
+
+
+def _sql_contact_views(spark, stg_activities):
+    """The contact views as the Spark-SQL rendering of the oracle's
+    window CTEs, over ``stg_activities`` registered under that name: a
+    reference that shares no code with staging.py."""
+    from multi_report_etl_pipeline_spark import oracle
+
+    stg_activities.createOrReplaceTempView("stg_activities")
+    ctes = [
+        (name, sql)
+        for name, sql in oracle.staging_ctes(dialect="spark")
+        if name not in ("stg_accounts", "stg_activities", "clean_accounts")
+    ]
+    body = ",\n".join(f"{name} AS (\n{sql}\n)" for name, sql in ctes)
+    try:
+        return {
+            name: _rows(spark.sql(f"WITH {body}\nSELECT * FROM {name}"))
+            for name, _ in ctes
+            if name.startswith("clean_contacts_")
+        }
+    finally:
+        spark.catalog.dropTempView("stg_activities")
 
 
 @settings(
@@ -248,9 +277,10 @@ _TIMES = ["10:00:00", "10:00:00", "23:59:59", "00:00:01"]
 def test_survivor_agg_equals_window_path_and_dedups(rows):
     """SURVEY.md §5.2 property 4 + the materialization rewrite contract,
     for ARBITRARY activity inputs (duplicated ids, tied dates/times,
-    malformed dates): every clean contact view keeps <=1 row per
-    account, and the min_by survivor-aggregation path produces exactly
-    the window path's rows."""
+    malformed dates and times, NULL times): every clean contact view
+    keeps <=1 row per account, and both physical forms (the lazy windows
+    and the min_by survivors) produce exactly the rows of the oracle's
+    window SQL run by Spark."""
     from tests.test_edge_cases import _activities_df, _activity
 
     spark = _shared_spark["spark"]
@@ -268,18 +298,19 @@ def test_survivor_agg_equals_window_path_and_dedups(rows):
         for fp, (a, i, d, t, ch, ct, oc) in enumerate(rows)
     ]
     df = _activities_df(spark, data)
-    lazy = {
-        name: sorted(tuple(map(repr, r)) for r in fn(df).collect())
-        for name, fn in staging.STAGING_BUILDERS.items()
-        if name != "clean_accounts"
+    want = _sql_contact_views(spark, df)
+    forms = {
+        "window": staging.contact_views(df),
+        "survivors": staging.clean_views_from_survivors(
+            staging.combined_contact_survivors(df)
+        ),
     }
-    surv = staging.clean_views_from_survivors(
-        staging.combined_contact_survivors(df)
-    )
-    for name, want in lazy.items():
-        got = sorted(tuple(map(repr, r)) for r in surv[name].collect())
-        assert got == want, f"{name}: survivor path != window path"
-        accounts = [r[0] for r in want]
+    assert set(want) == set(forms["window"]) == set(forms["survivors"])
+    for form, views in forms.items():
+        for name, rows_want in want.items():
+            assert _rows(views[name]) == rows_want, f"{name}: {form} form != SQL"
+    for name, rows_want in want.items():
+        accounts = [r[0] for r in rows_want]
         assert len(accounts) == len(set(accounts)), f"{name}: >1 row per account"
 
 

@@ -4,9 +4,11 @@ invariants (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from multi_report_etl_pipeline_spark import oracle
 from multi_report_etl_pipeline_spark.queries.reference import QUERIES, build_staging
 from tests.conftest import SF_DIR, assert_matches_oracle
 
@@ -113,7 +115,8 @@ def test_materialized_staging_matches_lazy(spark):
 def test_materialized_staging_follows_source_rewrite(spark, tmp_path):
     """build_staging serves the materialized survivors only while the
     orders/lineitem fingerprint matches: after an in-place rewrite of
-    lineitem it must equal the lazy path on the new data. Scratch stays
+    lineitem it must equal the lazy path on the new data and the DuckDB
+    oracle on the rewritten files. Scratch stays
     bounded: materializing again leaves exactly one survivors dir, and
     clear_materialized_staging deletes it."""
     import glob
@@ -162,8 +165,49 @@ def test_materialized_staging_follows_source_rewrite(spark, tmp_path):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "multi_report_etl_pipeline_spark_staging" in plan, plan
         assert rows_of(df) == lazy
+        # and both equal the DuckDB oracle on the rewritten files
+        con = duckdb.connect()
+        try:
+            for t in reference._SURVIVOR_SOURCES:  # noqa: SLF001
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+            assert_matches_oracle(
+                df, con, oracle.view_sql("clean_contacts_primary"), schema="main"
+            )
+        finally:
+            con.close()
         reference.materialize_staging(spark, d, n_splits=4)
         assert len(survivor_dirs() - before) == 1
     finally:
         reference.clear_materialized_staging(d)
     assert survivor_dirs() - before == set()
+
+
+def test_materialized_builds_start_no_job(spark):
+    """Building on materialized staging is planning only: build_staging
+    and the seven report/probe builds read the survivors with their
+    stored schema and start no Spark job."""
+    from multi_report_etl_pipeline_spark.queries import reference
+
+    builds = (
+        "report_mortgage_portfolio",
+        "report_restructuring_pipeline",
+        "report_commercial_promises",
+        "quality_view_counts",
+        "quality_duplicate_operations",
+        "quality_null_keys",
+        "quality_date_parse_failures",
+    )
+    sc = spark.sparkContext
+    reference.materialize_staging(spark, SF_DIR, n_splits=4)
+    group = "test_materialized_builds_start_no_job"
+    try:
+        sc.setJobGroup(group, group)
+        build_staging(spark, SF_DIR)
+        for name in builds:
+            QUERIES[name].fn(spark, SF_DIR)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        reference.clear_materialized_staging(SF_DIR)
+    assert jobs == [], jobs
