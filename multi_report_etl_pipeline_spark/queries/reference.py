@@ -46,14 +46,20 @@ def materialize_staging(
     reading them back. The materialization is a plain parquet path (no
     catalog), stored with its schema so reading it starts no job, in a
     scratch dir the artifact store owns: it is served
-    while the orders/lineitem fingerprint matches, and deleted on a
-    rewrite of either, by clear_materialized_staging or at exit."""
+    while the orders/lineitem fingerprint matches (a call with a
+    matching materialization does nothing), and deleted on a rewrite of
+    either, by clear_materialized_staging or at exit."""
     import os
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from multi_report_etl_pipeline_spark.io import fan_out  # noqa: PLC0415
 
+    if _survivors(sf_dir) is not None:
+        return
+    # a new materialization reroutes build_staging: clearing sf_dir first
+    # retires the plans built on its lazy views (artifacts module docstring)
+    artifacts.clear(_SURVIVORS, sf_dir)
     n_splits = n_splits or spark.sparkContext.defaultParallelism
     # project BOTH sides down before the exchange/broadcast explicitly:
     # Catalyst does not prune columns below a user repartition or a
@@ -106,24 +112,41 @@ def build_staging(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     they are the lazy window views (the reference's non-materialized
     views, README.md:116). A lookup never materializes: its build is a
     no-op, which also drops a stale entry.
+
+    The views are built once per form and drop: a session-store entry
+    keyed by ``sf_dir`` and the survivors path (None for the lazy form),
+    so the report and probe builds of one drop compose on one dict.
     """
-    orders = read_table(spark, sf_dir, "orders")
-    stg_accounts = domain.stg_accounts_df(orders)
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    stg_activities = domain.stg_activities_df(lineitem, orders)
-    survivors = artifacts.get(_SURVIVORS, sf_dir, _SURVIVOR_SOURCES, lambda: None)
-    if survivors is not None:
-        path, schema = survivors
-        surv = spark.read.schema(schema).parquet(path)
-        contacts = staging.clean_views_from_survivors(surv)
-    else:
-        contacts = staging.contact_views(stg_activities)
-    return {
-        "stg_accounts": stg_accounts,
-        "stg_activities": stg_activities,
-        "clean_accounts": staging.clean_accounts(stg_accounts),
-        **contacts,
-    }
+    survivors = _survivors(sf_dir)
+
+    def build() -> dict[str, DataFrame]:
+        orders = read_table(spark, sf_dir, "orders")
+        stg_accounts = domain.stg_accounts_df(orders)
+        lineitem = read_table(spark, sf_dir, "lineitem")
+        stg_activities = domain.stg_activities_df(lineitem, orders)
+        if survivors is not None:
+            path, schema = survivors
+            surv = spark.read.schema(schema).parquet(path)
+            contacts = staging.clean_views_from_survivors(surv)
+        else:
+            contacts = staging.contact_views(stg_activities)
+        return {
+            "stg_accounts": stg_accounts,
+            "stg_activities": stg_activities,
+            "clean_accounts": staging.clean_accounts(stg_accounts),
+            **contacts,
+        }
+
+    kind = ("staging", survivors and survivors[0])
+    return dict(
+        artifacts.session_store(spark).get(kind, sf_dir, _SURVIVOR_SOURCES, build)
+    )
+
+
+def _survivors(sf_dir: str) -> tuple[str, StructType] | None:
+    """The materialized survivors' (path, schema) of ``sf_dir`` while its
+    sources are unchanged, else None."""
+    return artifacts.get(_SURVIVORS, sf_dir, _SURVIVOR_SOURCES, lambda: None)
 
 
 def _view_query(name: str):

@@ -9,6 +9,11 @@ the `_before` files for queries that existed then):
     python scripts/capture_plans.py --suffix after --outdir plans/r10 \
         tpch_q9_bucketed events_hourly_unique_users ...
 
+Reference-surface queries are captured twice, on the lazy staging
+views (suffix ``<suffix>_lazy``) and then on materialized staging
+(``<suffix>_materialized``), since ``materialize_staging`` reroutes
+their contact views; every other query is captured once.
+
 Optional per-run Spark session confs, e.g. to capture a plan with
 static broadcasts off:
 
@@ -37,10 +42,7 @@ def main() -> None:
     ap.add_argument("--conf", action="append", default=[])
     args = ap.parse_args()
 
-    from multi_report_etl_pipeline_spark.queries import all_queries
-    from multi_report_etl_pipeline_spark.queries.reference import (
-        materialize_staging,
-    )
+    from multi_report_etl_pipeline_spark.queries import all_queries, reference
     from multi_report_etl_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="capture_plans")
@@ -49,26 +51,35 @@ def main() -> None:
         k, _, v = kv.partition("=")
         spark.conf.set(k, v)
     registry = all_queries()
-    # reports/clean views read the materialized survivor table when
-    # staging is materialized (the reports_daily path); show those plans
-    materialize_staging(spark, SF_DIR)
     os.makedirs(args.outdir, exist_ok=True)
+
+    def capture(names: list[str], suffix: str) -> None:
+        for name in names:
+            df = registry[name].fn(spark, SF_DIR)
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            header = (
+                f"# {name} — explain('formatted') at {SF_DIR}\n"
+                f"# suffix: {suffix}; session confs: {args.conf or 'none'}\n\n"
+            )
+            out = os.path.join(args.outdir, f"{name}_{suffix}.txt")
+            with open(out, "w") as f:
+                f.write(header + buf.getvalue())
+            print(f"wrote {out}")
+
     for name in args.queries:
         if name not in registry:
             print(f"SKIP (not in registry): {name}")
-            continue
-        df = registry[name].fn(spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        header = (
-            f"# {name} — explain('formatted') at {SF_DIR}\n"
-            f"# suffix: {args.suffix}; session confs: {args.conf or 'none'}\n\n"
-        )
-        out = os.path.join(args.outdir, f"{name}_{args.suffix}.txt")
-        with open(out, "w") as f:
-            f.write(header + buf.getvalue())
-        print(f"wrote {out}")
+    names = [n for n in args.queries if n in registry]
+    ref = [n for n in names if n in reference.QUERIES]
+    capture([n for n in names if n not in reference.QUERIES], args.suffix)
+    capture(ref, f"{args.suffix}_lazy")
+    if ref:
+        # the reports_daily path: contact views read the survivors
+        reference.materialize_staging(spark, SF_DIR)
+        capture(ref, f"{args.suffix}_materialized")
+        reference.clear_materialized_staging(SF_DIR)
     spark.stop()
 
 

@@ -3,7 +3,9 @@ under a deliberately plain SparkSession (the driver builds its own) and
 compare against DuckDB through the pandas materialization path — the
 strictest canonicalization we know the driver can apply (DuckDB ``.df()``
 collapses DECIMAL to float64, so Decimal-vs-float64 text differences that
-plain ``.collect()`` comparison would miss show up here).
+plain ``.collect()`` comparison would miss show up here). Each query
+runs twice, so the second call checks the prepared plan the registry
+serves on a repeat (queries.prepared).
 
 Usage:
     python scripts/validate.py            # all oracle-checked queries
@@ -52,6 +54,35 @@ def canon(df: pd.DataFrame) -> list[tuple]:
     return rows
 
 
+def check(con, spark, name: str, spec, call: int) -> bool:
+    """Run ``name`` once and compare it with its oracle; print the
+    outcome of this ``call`` (1 or 2)."""
+    t0 = time.time()
+    try:
+        spdf = spec.fn(spark, SF_DIR).toPandas()
+        ddf = con.execute(spec.oracle).df()
+    except Exception as exc:  # noqa: BLE001
+        print(f"ERR  {name} (call {call}): {exc}")
+        return False
+    cs, cd = canon(spdf), canon(ddf)
+    cols_ok = sorted(spdf.columns) == sorted(ddf.columns)
+    ok = cols_ok and cs == cd
+    print(f"{'OK  ' if ok else 'DIFF'} {name} (call {call})  "
+          f"spark={len(cs)} duck={len(cd)}  {time.time() - t0:.1f}s")
+    if not ok:
+        if not cols_ok:
+            print(f"    cols: spark={sorted(spdf.columns)} duck={sorted(ddf.columns)}")
+        shown = 0
+        for s, d in zip(cs, cd):
+            if s != d and shown < 3:
+                for c, sv, dv in zip(sorted(spdf.columns), s, d):
+                    if sv != dv:
+                        print(f"    {c}: spark={sv!r}  duck={dv!r}")
+                print("    ---")
+                shown += 1
+    return ok
+
+
 def main(names: list[str]) -> int:
     from pyspark.sql import SparkSession
 
@@ -71,31 +102,10 @@ def main(names: list[str]) -> int:
         if spec.oracle is None:
             print(f"SKIP {name} (no oracle)")
             continue
-        t0 = time.time()
-        try:
-            spdf = spec.fn(spark, SF_DIR).toPandas()
-            ddf = con.execute(spec.oracle).df()
-        except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            print(f"ERR  {name}: {exc}")
-            continue
-        cs, cd = canon(spdf), canon(ddf)
-        cols_ok = sorted(spdf.columns) == sorted(ddf.columns)
-        ok = cols_ok and cs == cd
-        print(f"{'OK  ' if ok else 'DIFF'} {name}  "
-              f"spark={len(cs)} duck={len(cd)}  {time.time() - t0:.1f}s")
-        if not ok:
-            failures.append(name)
-            if not cols_ok:
-                print(f"    cols: spark={sorted(spdf.columns)} duck={sorted(ddf.columns)}")
-            shown = 0
-            for s, d in zip(cs, cd):
-                if s != d and shown < 3:
-                    for c, sv, dv in zip(sorted(spdf.columns), s, d):
-                        if sv != dv:
-                            print(f"    {c}: spark={sv!r}  duck={dv!r}")
-                    print("    ---")
-                    shown += 1
+        for call in (1, 2):
+            if not check(con, spark, name, spec, call):
+                failures.append(name)
+                break
     spark.stop()
     print(f"\n{len(targets) - len(failures)}/{len(targets)} OK; failures: {failures}")
     return 1 if failures else 0
