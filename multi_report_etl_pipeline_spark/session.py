@@ -165,7 +165,35 @@ def get_spark(
         # cluster this knob is per-executor memory instead. Only takes
         # effect at JVM launch — set the env var before first getOrCreate.
         .config("spark.driver.memory", _driver_mem())
+        # Spark keeps compiled whole-stage and expression classes in ONE
+        # JVM-wide LRU cache of 100 entries by default. The engine's
+        # working set is larger: with a large cache, perfbench's warm-up
+        # compiles 238 distinct classes for one olap_serving round and 86
+        # for one reports_daily pass (258 and 118 with the stage id below
+        # in class names), so at 100 entries every request evicted and
+        # recompiled them (150-216 compiles and ~2 s per 14-query round,
+        # ~88 per drop) and lost their JIT-compiled code. 1024 holds both
+        # with room for the registry's other queries. Static: only takes
+        # effect at JVM launch.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # The cache key is the generated source, and by default the
+        # whole-stage class name carries the codegen stage id, which
+        # AQE assigns in stage-completion order: a multi-join query
+        # (q9, q21) often got new ids, hence new keys, on a repeat and
+        # recompiled up to 15 classes at sf0.001. Without the id the
+        # same code is the same key; only stack traces lose the suffix.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def codegen_stats(spark: SparkSession) -> dict[str, float]:
+    """Generated-code compilations of this JVM so far: ``compiles`` is
+    the number of classes compiled (codegen cache misses) and
+    ``compile_ms`` the summed compile time of the histogram's retained
+    sample, which holds every compilation until it exceeds 1028."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    hist = metrics.METRIC_COMPILATION_TIME()
+    return {"compiles": hist.getCount(), "compile_ms": float(sum(hist.getSnapshot().getValues()))}

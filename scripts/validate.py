@@ -24,6 +24,10 @@ import pandas as pd
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+# Python UDF workers import the package through PYTHONPATH, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO_ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_VALIDATE_SF", "/root/testdata/sf0.01")
 TABLES = (
